@@ -60,22 +60,6 @@ object Bench {
       }
       def reset(): Unit = { tasks.set(0); sRead.set(0); sWrite.set(0) }
     }
-    // listenerBus is private[spark] = public in bytecode; drain it so
-    // every task-end of the just-finished query is attributed to it
-    def drainListenerBus(): Unit =
-      try {
-        val bus = spark.sparkContext.getClass.getMethod("listenerBus")
-          .invoke(spark.sparkContext)
-        bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      } catch {
-        // NonFatal only: swallowing InterruptedException would lose the
-        // interrupt flag, and VM errors must propagate (r13 ADVICE).
-        // Reflection may wrap the interrupt in an ITE — restore it.
-        case e: java.lang.reflect.InvocationTargetException
-            if e.getCause.isInstanceOf[InterruptedException] =>
-          Thread.currentThread().interrupt()
-        case scala.util.control.NonFatal(_) => Thread.sleep(300)
-      }
     val planMetrics =
       scala.collection.mutable.LinkedHashMap[String, (Long, Long, Long)]()
     def timeOne(name: String): Double = {
@@ -97,9 +81,9 @@ object Bench {
     // warm-up pass doubles as the plan-metrics capture pass
     spark.sparkContext.addSparkListener(planListener)
     names.foreach { n =>
-      drainListenerBus(); planListener.reset()
+      drainListenerBus(spark.sparkContext); planListener.reset()
       timeOne(n)
-      drainListenerBus()
+      drainListenerBus(spark.sparkContext)
       planMetrics(n) = (planListener.tasks.get, planListener.sRead.get,
         planListener.sWrite.get)
     }
@@ -255,4 +239,21 @@ object Bench {
     spark.stop()
     println(json)
   }
+
+  /** Block until every event posted so far has reached the listeners, so
+    * a listener sees every task-end of the work that just finished.
+    * `listenerBus` is private[spark], which is public in bytecode. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    try {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    } catch {
+      // NonFatal only: swallowing InterruptedException would lose the
+      // interrupt flag, and VM errors must propagate (r13 ADVICE).
+      // Reflection may wrap the interrupt in an ITE — restore it.
+      case e: java.lang.reflect.InvocationTargetException
+          if e.getCause.isInstanceOf[InterruptedException] =>
+        Thread.currentThread().interrupt()
+      case scala.util.control.NonFatal(_) => Thread.sleep(300)
+    }
 }

@@ -41,7 +41,6 @@ object Tables {
   def parquetRowCount(s: SparkSession, path: String): Long =
     rowCountCache.getOrElseUpdate(path, {
       import org.apache.hadoop.fs.Path
-      import org.apache.parquet.hadoop.ParquetFileReader
       import org.apache.parquet.hadoop.util.HadoopInputFile
       val conf = s.sessionState.newHadoopConf()
       val p = new Path(path)
@@ -52,7 +51,8 @@ object Tables {
             st.getPath.getName.endsWith(".parquet"))
         else Seq(fs.getFileStatus(p))
       files.map { st =>
-        val rd = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        val rd = graft.compact.Compactor.openParquet(
+          HadoopInputFile.fromStatus(st, conf))
         try rd.getRecordCount finally rd.close()
       }.sum
     })

@@ -51,8 +51,8 @@ object StageProfile {
       stages.clear()
       spark.sparkContext.addSparkListener(listener)
       val sec = run()
-      // drain listener bus so the final stages are captured
-      Thread.sleep(500)
+      // drain the listener bus so the final stages are captured
+      graft.Bench.drainListenerBus(spark.sparkContext)
       spark.sparkContext.removeSparkListener(listener)
       println(f"== $name: $sec%.2f s, ${stages.size} stages, " +
         f"${stages.map(_.tasks).sum} tasks ==")

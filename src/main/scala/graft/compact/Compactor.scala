@@ -2,10 +2,14 @@ package graft.compact
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetFileWriter}
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
 /** Merge-and-write executor: the engine's equivalent of the reference's
   * single data-moving query — `SELECT * FROM read_parquet([...]) ORDER BY
@@ -18,7 +22,7 @@ import org.apache.spark.sql.functions.col
   *  - scan → `repartitionByRange(k, time)` → per-partition sort → k
   *    time-disjoint sorted zstd parts written IN PARALLEL;
   *  - single-file contract → the parts are then byte-concatenated at the
-  *    ROW-GROUP level (`ParquetFileWriter.appendFile`: no decode, no
+  *    ROW-GROUP level (`ParquetFileReader.appendTo`: no decode, no
   *    re-encode — an I/O-bound driver-side copy). A naive
   *    `coalesce(1).sort.write` serializes scan+sort+compress into one
   *    thread and measured 38× slower than the reference; parallel-parts +
@@ -57,7 +61,7 @@ class Compactor(
     * SURVEY.md §7.4 bug 3). */
   def merge(rootDir: Path, bucket: Bucket): CompactResult = {
     val inputs = bucket.files.map(f => new Path(rootDir, f.path).toString)
-    requireUniformSchema(rootDir, bucket)
+    val readSchema = requireUniformSchema(rootDir, bucket)
     val totalBytes = bucket.files.map(_.size_bytes).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / maxDesiredFileSizeBytes).toInt)
     val split = totalBytes > largeCutoffBytes && nOut > 1
@@ -67,7 +71,9 @@ class Compactor(
     val kSort = math.max(if (split) nOut else 1, math.min(
       spark.sparkContext.defaultParallelism,
       math.ceil(totalBytes.toDouble / sortPartitionBytes).toInt))
-    val df = spark.read.parquet(inputs: _*)
+    // explicit schema: the footers are already read, so Spark's schema
+    // inference (one extra job per bucket) has nothing left to learn
+    val df = spark.read.schema(readSchema).parquet(inputs: _*)
     // Opt-in z-order layout (like the sizing knobs: a capability the
     // reference's config shape implies but its ORDER BY time never uses):
     // within ONE bucket the time axis is already window-bounded with
@@ -165,8 +171,14 @@ class Compactor(
     * incompatibility). Footer reads are driver-side and per-bucket small;
     * evolution across buckets/time remains supported (each bucket merges
     * its own hour), and readers wanting union-of-schemas semantics have
-    * the engine's mergeSchema path (SourceFormatsSpec / q42). */
-  private def requireUniformSchema(rootDir: Path, bucket: Bucket): Unit = {
+    * the engine's mergeSchema path (SourceFormatsSpec / q42).
+    *
+    * Returns the read schema: exactly what `spark.read.parquet(inputs)`
+    * would infer — the footer of the path-sorted first input, its Spark
+    * row metadata when present, else its parquet schema converted under
+    * the session's SQL conf. Spark would launch one job per bucket to
+    * read that footer again; here it is already in hand. */
+  private[compact] def requireUniformSchema(rootDir: Path, bucket: Bucket): StructType = {
     import scala.jdk.CollectionConverters._
     // canonical column set: path + primitive + logical annotation. The
     // repetition level (required vs optional) is deliberately EXCLUDED —
@@ -178,11 +190,13 @@ class Compactor(
         val ann = Option(t.getLogicalTypeAnnotation).fold("")(_.toString)
         s"${cd.getPath.mkString(".")}:${t.getPrimitiveTypeName}:$ann"
       }.toSet
-    val schemas = bucket.files.map { f =>
+    val footers = bucket.files.map { f =>
       val p = new Path(rootDir, f.path)
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(p, fs.getConf))
-      try f.path -> canon(r.getFooter.getFileMetaData.getSchema)
-      finally r.close()
+      val r = openParquet(p)
+      try (f.path, p, r.getFooter) finally r.close()
+    }
+    val schemas = footers.map { case (rel, _, footer) =>
+      rel -> canon(footer.getFileMetaData.getSchema)
     }
     if (schemas.map(_._2).distinct.length > 1) {
       val byS = schemas.groupBy(_._2).map { case (s, fs0) =>
@@ -194,6 +208,11 @@ class Compactor(
           s"refusing to merge (a silent merge would drop columns):\n" +
           byS.mkString("\n"))
     }
+    // the converter is built from the session's SQL conf, as Spark's own
+    // inference builds it: a Hadoop conf lacks the SQL keys it reads
+    val (_, first, footer) = footers.minBy(_._2.toString)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(first, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
   /** Publish a finished file at its final name — the object-store commit
@@ -218,13 +237,15 @@ class Compactor(
           "(partial copy on a non-atomic-rename store?)")
   }
 
+  private def openParquet(p: Path): ParquetFileReader =
+    Compactor.openParquet(HadoopInputFile.fromPath(p, fs.getConf))
+
   /** Concatenate range-disjoint sorted parquet parts into one file at the
     * row-group level: pages are copied verbatim (no decode/re-encode), so
     * this is a sequential I/O-bound copy — the price of the single-file
     * contract, decoupled from the parallel sort+compress above. */
   private def concatParquet(parts: Vector[Path], dest: Path): Unit = {
-    val conf = fs.getConf
-    val first = ParquetFileReader.open(HadoopInputFile.fromPath(parts.head, conf))
+    val first = openParquet(parts.head)
     val (schema, keyValueMeta) =
       try {
         val fm = first.getFooter.getFileMetaData
@@ -232,11 +253,14 @@ class Compactor(
       } finally first.close()
     fs.delete(dest, false) // dest is a staging path inside tmpDir
     val writer = new ParquetFileWriter(
-      HadoopOutputFile.fromPath(dest, conf), schema,
+      HadoopOutputFile.fromPath(dest, fs.getConf), schema,
       ParquetFileWriter.Mode.OVERWRITE,
       rowGroupTargetBytes, 8388608)
     writer.start()
-    parts.foreach(p => writer.appendFile(HadoopInputFile.fromPath(p, conf)))
+    parts.foreach { p =>
+      val r = openParquet(p)
+      try r.appendTo(writer) finally r.close()
+    }
     writer.end(keyValueMeta)
   }
 
@@ -244,8 +268,7 @@ class Compactor(
     * Falls back to planner rollup bounds when the time column carries no
     * statistics. */
   private def footerStats(file: Path, relPath: String, id: Long): FileMeta = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(file, fs.getConf))
+    val reader = openParquet(file)
     try {
       val footer = reader.getFooter
       val rows = reader.getRecordCount
@@ -275,6 +298,14 @@ class Compactor(
 }
 
 object Compactor {
+  /** A parquet reader whose read options come from the input's own
+    * Configuration. The one-argument `ParquetFileReader.open` builds a
+    * fresh `Configuration`, which rescans every jar on the classpath for
+    * `*-default.xml`/`*-site.xml`: ~8 ms per footer with Spark's ~250
+    * jars, more than the footer read itself. */
+  def openParquet(in: HadoopInputFile): ParquetFileReader =
+    ParquetFileReader.open(in, HadoopReadOptions.builder(in.getConfiguration).build())
+
   def localFs(spark: SparkSession): FileSystem =
     FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
   def fsFor(path: Path, conf: Configuration): FileSystem = path.getFileSystem(conf)

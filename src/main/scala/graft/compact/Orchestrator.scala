@@ -173,24 +173,19 @@ class Orchestrator(
     val buckets = allBuckets.filter(_.host == host)
     skipped.foreach(p => log(s"skipping unparseable path: $p"))
 
-    // B10: existence filter against the real FS — one RECURSIVE listing
-    // per referenced date directory instead of one exists() per file.
+    // B10: existence filter against the real FS — one listing of each
+    // referenced date directory's tree instead of one exists() per file.
     // The WAL layout puts each file in its own minute dir, so per-parent
-    // listings would still be per-file; listing the date prefix is a flat
-    // paged LIST on object stores (S3: 1000 keys/page), making driver
-    // metadata round-trips scale with directories/pages, not files
-    // (SURVEY §2B10; r2 verdict "what's wrong #2").
+    // listings would still be per-file; listing the date prefix makes
+    // driver metadata round-trips scale with directories/pages, not files
+    // (SURVEY §2B10; r2 verdict "what's wrong #2"). How the tree is
+    // listed depends on the store: see [[filesUnder]].
     val onDisk: Set[String] = buckets
       .flatMap(_.files.map(f => dateDirOf(new Path(root, f.path))))
       .distinct
-      .flatMap { dir =>
-        val found = Vector.newBuilder[String]
-        try {
-          val it = fs.listFiles(dir, true)
-          while (it.hasNext) found += fs.makeQualified(it.next().getPath).toString
-        } catch { case _: java.io.FileNotFoundException => () }
-        found.result()
-      }.toSet
+      .flatMap(filesUnder)
+      .map(p => fs.makeQualified(p).toString)
+      .toSet
     val checked = buckets.map { b =>
       val (present, missing) = b.files.partition(f =>
         onDisk.contains(fs.makeQualified(new Path(root, f.path)).toString))
@@ -310,6 +305,30 @@ class Orchestrator(
       }
     } finally bd.close()
   }
+
+  /** Every file below `dir`; empty if `dir` does not exist. The choice
+    * follows the FS scheme, not a setting:
+    *  - object stores (and HDFS): one recursive `listFiles`, a flat paged
+    *    LIST of the prefix (S3: 1000 keys/page);
+    *  - the local FS: a `listStatus` walk, one call per directory. Its
+    *    `listFiles` wraps every entry in a `LocatedFileStatus`, which
+    *    copies the entry's permissions, and without libhadoop the local
+    *    FS reads those by forking `ls -ld` — ~4 ms per file and dir. */
+  private def filesUnder(dir: Path): Vector[Path] =
+    if (fs.getUri.getScheme == "file") {
+      def walk(d: Path): Vector[Path] =
+        (try fs.listStatus(d).toVector
+        catch { case _: java.io.FileNotFoundException => Vector.empty })
+          .flatMap(st => if (st.isDirectory) walk(st.getPath) else Vector(st.getPath))
+      walk(dir)
+    } else {
+      val found = Vector.newBuilder[Path]
+      try {
+        val it = fs.listFiles(dir, true)
+        while (it.hasNext) found += it.next().getPath
+      } catch { case _: java.io.FileNotFoundException => () }
+      found.result()
+    }
 
   /** The date-level ancestor of a WAL file path (…/date/HH-MM/file): the
     * batching prefix for listings and deletes. Falls back to the immediate

@@ -16,7 +16,11 @@ import graft.TestSpark
   * FileSystem: `exists` and `listStatus` counts must be identical.
   * (Per-file `delete` calls remain — the local FS bulk-delete page size is
   * 1 — but they are issued through the BulkDelete API, which object stores
-  * coalesce into one round-trip per page.)
+  * coalesce into one round-trip per page.) The listing method follows the
+  * store: a `file:` root is walked with `listStatus` and never asks for
+  * `LocatedFileStatus` listings (each forks `ls -ld` per entry without
+  * libhadoop); an object-store root gets one recursive `listFiles` per
+  * date directory.
   */
 class MetadataScaleSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -30,16 +34,24 @@ class MetadataScaleSpec extends AnyFunSuite {
       extends FilterFileSystem(under) {
     val existsCalls = new AtomicInteger
     val listCalls = new AtomicInteger
+    val listFilesCalls = new AtomicInteger
+    val locatedListCalls = new AtomicInteger
+    val statusListed = new java.util.concurrent.ConcurrentLinkedQueue[Path]
     val deleteCalls = new AtomicInteger
     override def exists(p: Path): Boolean = {
       existsCalls.incrementAndGet(); super.exists(p)
     }
     override def listStatus(p: Path): Array[FileStatus] = {
-      listCalls.incrementAndGet(); super.listStatus(p)
+      listCalls.incrementAndGet(); statusListed.add(p); super.listStatus(p)
     }
     override def listFiles(p: Path, recursive: Boolean)
         : org.apache.hadoop.fs.RemoteIterator[org.apache.hadoop.fs.LocatedFileStatus] = {
-      listCalls.incrementAndGet(); super.listFiles(p, recursive)
+      listCalls.incrementAndGet(); listFilesCalls.incrementAndGet()
+      super.listFiles(p, recursive)
+    }
+    override def listLocatedStatus(p: Path)
+        : org.apache.hadoop.fs.RemoteIterator[org.apache.hadoop.fs.LocatedFileStatus] = {
+      locatedListCalls.incrementAndGet(); super.listLocatedStatus(p)
     }
     override def delete(p: Path, recursive: Boolean): Boolean = {
       deleteCalls.incrementAndGet(); super.delete(p, recursive)
@@ -106,10 +118,35 @@ class MetadataScaleSpec extends AnyFunSuite {
       s"exists scaled with files: ${fsSmall.existsCalls} -> ${fsBig.existsCalls}")
     assert(fsBig.listCalls.get == fsSmall.listCalls.get,
       s"listings scaled with files: ${fsSmall.listCalls} -> ${fsBig.listCalls}")
+    // a file: root is walked with listStatus, never a located listing
+    Seq(fsSmall, fsBig).foreach { f =>
+      assert(f.listFilesCalls.get == 0 && f.locatedListCalls.get == 0,
+        s"located listings on a file: root: listFiles ${f.listFilesCalls}, " +
+          s"listLocatedStatus ${f.locatedListCalls}")
+    }
     // deletes go file-by-file on the local FS (BulkDelete page size 1) but
     // must not exceed files + dirs (GC) + per-bucket tmp dirs
     assert(fsBig.deleteCalls.get <= 16 + 2 + 2 * 3 + 4,
       s"unexpected delete amplification: ${fsBig.deleteCalls}")
+  }
+
+  test("an object-store root lists each date dir with one recursive listFiles") {
+    val dir = buildFixture(filesPerHour = 3)
+    val under = new graft.operators.ObjSimFileSystem
+    under.initialize(java.net.URI.create("objsim:///"),
+      spark.sparkContext.hadoopConfiguration)
+    val fs = new CountingFs(under)
+    // dry run: planning plus the existence check, no data moves
+    val r = new Orchestrator(spark,
+      CompactConfig(dataDir = "objsim:" + dir.toString, dryRun = true),
+      Some(fs)).run().head
+    assert(r.buckets == 2 && r.missingFiles.isEmpty)
+    // one date directory (2025-01-26) => one listFiles, and no
+    // per-directory listStatus walk of the data tree
+    assert(fs.listFilesCalls.get == 1, s"listFiles calls: ${fs.listFilesCalls}")
+    import scala.jdk.CollectionConverters._
+    val walked = fs.statusListed.asScala.filter(_.toString.contains("/dbs/"))
+    assert(walked.isEmpty, s"listStatus under dbs/: ${walked.mkString(", ")}")
   }
 
   test("merged output is correct under the counting FS (sanity)") {

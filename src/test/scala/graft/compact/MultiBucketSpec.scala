@@ -7,7 +7,9 @@ import graft.TestSpark
 
 /** Many-bucket, multi-host orchestration: 2 hosts × 2 tables × 3 hours ×
   * 3 files — 12 independent buckets compacted as concurrent Spark jobs,
-  * all metadata rewritten, nothing leaking across hosts or tables. */
+  * all metadata rewritten, nothing leaking across hosts or tables. Each
+  * bucket is exactly one Spark job: the read schema comes from the
+  * footers the schema guard already read, not from an inference job. */
 class MultiBucketSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val base = 1737928800L * 1000000000L
@@ -60,11 +62,27 @@ class MultiBucketSpec extends AnyFunSuite {
         SnapshotCodec.render(snap))
     }
 
+    // jobs the merges submit, by call site (planning jobs come from the
+    // Orchestrator and Planner)
+    val mergeJobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.stageInfos.exists(_.name.contains("Compactor.scala")))
+          mergeJobs.incrementAndGet()
+    }
+    graft.Bench.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
     // threshold 0 forces the executor-side planning path — the full E2E
     // (merge + metadata rewrite + delete) must behave identically on it
-    val reports = new Orchestrator(spark, CompactConfig(
-      dataDir = dir.toString, bucketParallelism = 4,
-      distributedPlanThreshold = 0)).run()
+    val reports =
+      try new Orchestrator(spark, CompactConfig(
+        dataDir = dir.toString, bucketParallelism = 4,
+        distributedPlanThreshold = 0)).run()
+      finally {
+        graft.Bench.drainListenerBus(spark.sparkContext)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    assert(mergeJobs.get == 12, s"12 buckets submitted ${mergeJobs.get} merge jobs")
     assert(reports.map(_.host) == Seq("hostA", "hostB"))
     assert(reports.forall(_.compacted == 6)) // 2 tables x 3 hours each
     reports.foreach { r =>
