@@ -45,21 +45,7 @@ object Bench {
     // passes stay listener-free). Deterministic where wall-clock is
     // not: a plan regression moves tasks/shuffle-bytes in the same
     // diff the 16-20% host-jitter band hides wall regressions in.
-    val planListener = new org.apache.spark.scheduler.SparkListener {
-      val tasks = new java.util.concurrent.atomic.AtomicLong
-      val sRead = new java.util.concurrent.atomic.AtomicLong
-      val sWrite = new java.util.concurrent.atomic.AtomicLong
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          tasks.incrementAndGet()
-          sRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          sWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-      def reset(): Unit = { tasks.set(0); sRead.set(0); sWrite.set(0) }
-    }
+    val planListener = new graft.bench.StageListener
     val planMetrics =
       scala.collection.mutable.LinkedHashMap[String, (Long, Long, Long)]()
     def timeOne(name: String): Double = {
@@ -84,8 +70,9 @@ object Bench {
       drainListenerBus(spark.sparkContext); planListener.reset()
       timeOne(n)
       drainListenerBus(spark.sparkContext)
-      planMetrics(n) = (planListener.tasks.get, planListener.sRead.get,
-        planListener.sWrite.get)
+      val st = planListener.stages
+      planMetrics(n) = (st.map(_.tasks).sum, st.map(_.shuffleRead).sum,
+        st.map(_.shuffleWrite).sum)
     }
     spark.sparkContext.removeSparkListener(planListener)
     // min-of-3 (r3 verdict #4): three same-code runs in one session ranged
@@ -191,53 +178,69 @@ object Bench {
       else sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(outFile), fileJson + "\n")
-    // plan gate wired into the round loop (r13 verdict #7): every FULL
-    // bench run diffs its just-captured plan shapes against the
-    // committed baseline's, so a plan regression fails loudly at bench
-    // close instead of waiting for a judge diff. Same tolerances as
-    // tools/compare_plan_metrics.py (tasks ±20% or ±8 — AQE wiggle;
-    // shuffle bytes ±25% or 4 MiB). Stderr + PLAN_GATE.json only; the
-    // stdout contract line stays untouched.
-    if (only.isEmpty && skip.isEmpty) try {
+    // plan gate wired into the round loop (r13 verdict #7): every bench
+    // run diffs its just-captured plan shapes against the committed
+    // baseline's (a targeted run over the queries it ran), so a plan
+    // regression fails loudly at bench close instead of waiting for a
+    // judge diff. Stderr + PLAN_GATE.json only; the stdout contract line
+    // stays untouched.
+    try {
       val basePath = java.nio.file.Paths.get("BENCH_OUT.json")
-      val baseNode = if (java.nio.file.Files.exists(basePath))
-        new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(basePath.toFile).get("plan_metrics")
-      else null
-      if (baseNode != null) {
-        val flagged = scala.collection.mutable.ListBuffer[String]()
-        var compared = 0
-        planMetrics.foreach { case (q, (t, sr, sw)) =>
-          val b = baseNode.get(q)
-          if (b != null) {
-            compared += 1
-            val bt = b.get("tasks").asLong()
-            if (math.abs(t - bt) > math.max(8L, (0.2 * bt).toLong))
-              flagged += s"$q: tasks $bt -> $t"
-            Seq(("shuffle_read", b.get("shuffle_read").asLong(), sr),
-                ("shuffle_write", b.get("shuffle_write").asLong(), sw))
-              .foreach { case (k, bv, cv) =>
-                if (math.abs(cv - bv) > math.max(4L << 20, (0.25 * bv).toLong))
-                  flagged += s"$q: $k $bv -> $cv"
-              }
-          }
-        }
-        val line = if (flagged.isEmpty)
-          s"plan shapes stable across $compared queries vs BENCH_OUT.json"
-        else s"${flagged.size} plan-shape moves vs BENCH_OUT.json " +
-          "(code change, not host noise): " + flagged.mkString("; ")
-        System.err.println(s"[plan-gate] $line")
-        val fl = flagged.map(s => "\"" + s.replace("\"", "'") + "\"")
-          .mkString("[", ",", "]")
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get("PLAN_GATE.json"),
-          s"""{"compared":$compared,"flagged":$fl}\n""")
+      val gate =
+        if (!java.nio.file.Files.exists(basePath)) Left("no BENCH_OUT.json")
+        else planGate(new com.fasterxml.jackson.databind.ObjectMapper()
+          .readTree(basePath.toFile), planMetrics.toSeq)
+      gate match {
+        case Left(why) => System.err.println(s"[plan-gate] skipped: $why")
+        case Right((compared, flagged)) =>
+          val line = if (flagged.isEmpty)
+            s"plan shapes stable across $compared queries vs BENCH_OUT.json"
+          else s"${flagged.size} plan-shape moves vs BENCH_OUT.json " +
+            "(code change, not host noise): " + flagged.mkString("; ")
+          System.err.println(s"[plan-gate] $line")
+          val fl = flagged.map(s => "\"" + s.replace("\"", "'") + "\"")
+            .mkString("[", ",", "]")
+          java.nio.file.Files.writeString(
+            java.nio.file.Paths.get("PLAN_GATE.json"),
+            s"""{"compared":$compared,"flagged":$fl}\n""")
       }
     } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[plan-gate] skipped: ${e.getMessage}")
     }
     spark.stop()
     println(json)
+  }
+
+  /** The plan gate: task counts and shuffle bytes are properties of plan
+    * and data, not of the host, so a move past the tolerance is a code
+    * change. Tolerances: tasks ±20 % or ±8, whichever is larger (AQE
+    * coalescing wiggles a few tasks); shuffle read/write ±25 % or 4 MiB.
+    * `baseline` is a bench file's root node; only queries on both sides
+    * are compared. Right((compared, flagged moves)), or Left when the
+    * baseline carries no `plan_metrics`. */
+  def planGate(baseline: com.fasterxml.jackson.databind.JsonNode,
+      current: Seq[(String, (Long, Long, Long))])
+      : Either[String, (Int, Seq[String])] = {
+    val base = baseline.get("plan_metrics")
+    if (base == null) Left("baseline has no plan_metrics")
+    else {
+      val both = current.flatMap { case (q, m) =>
+        Option(base.get(q)).map(b => (q, m, b)) }
+      Right(both.size -> both.flatMap { case (q, (t, sr, sw), b) =>
+        val bt = b.get("tasks").asLong()
+        val tasks =
+          if (math.abs(t - bt) > math.max(8L, (0.2 * bt).toLong))
+            Seq(s"$q: tasks $bt -> $t")
+          else Nil
+        tasks ++ Seq("shuffle_read" -> sr, "shuffle_write" -> sw).flatMap {
+          case (k, cv) =>
+            val bv = b.get(k).asLong()
+            if (math.abs(cv - bv) > math.max(4L << 20, (0.25 * bv).toLong))
+              Some(s"$q: $k $bv -> $cv")
+            else None
+        }
+      })
+    }
   }
 
   /** Block until every event posted so far has reached the listeners, so

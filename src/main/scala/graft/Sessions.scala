@@ -59,8 +59,9 @@ object Sessions {
     // 256 KB advisory globally and coalesced the sf0.1 suite's
     // post-shuffle stages to ≲4 partitions on 32 cores: the whole
     // bench regressed +20% and the driver's 8-core run BEAT its own
-    // 32-core run. Two r17 findings pin the mechanism (BENCH_NOTES
-    // r17 AQE): (a) `coalescePartitions.minPartitionNum` is inert in
+    // 32-core run. Two r17 findings pin the mechanism (AQE paragraphs
+    // of BENCH_NOTES "Round 19 (optimization round 1)"): (a)
+    // `coalescePartitions.minPartitionNum` is inert in
     // Spark 4.1 — ShufflePartitionsUtil floors the target size at
     // minPartitionSize (1 MB) AFTER the minNum division, so a sub-
     // 32 MB shuffle coalesces to ~bytes/1 MB partitions no matter what

@@ -81,9 +81,9 @@ object MergeBench {
     println(
       s"""{"fixture_dir":"${root}","rows":$rows,"input_files":$nFiles,""" +
         s""""input_bytes":$totalBytes,"single_file_sec":$singleSec,""" +
-        s""""single_rows":${result.files.map(_.row_count).sum},""" +
-        s""""split_sec":$splitSec,"split_files":${resultSplit.files.length},""" +
-        s""""split_rows":${resultSplit.files.map(_.row_count).sum}}""")
+        s""""single_rows":${result.map(_.row_count).sum},""" +
+        s""""split_sec":$splitSec,"split_files":${resultSplit.length},""" +
+        s""""split_rows":${resultSplit.map(_.row_count).sum}}""")
     spark.stop()
   }
 }

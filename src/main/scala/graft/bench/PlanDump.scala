@@ -3,12 +3,11 @@ package graft.bench
 import org.apache.spark.sql.execution.ExplainMode
 import graft.{Sessions, SparkEntry}
 
-/** Batch plan dumper: `runMain graft.bench.PlanDump <outDir> <suffix>
+/** Plan dumper: `runMain graft.bench.PlanDump <outDir> <suffix>
   * <query>[,<query>...] [sfDir]` writes each query's finalized formatted
   * physical plan to `<outDir>/<query>_<suffix>.txt` — one Spark session
-  * for the whole list (ExplainTool pays a full sbt+Spark startup per
-  * query, which makes before/after capture across a 10-query family
-  * impractical). */
+  * for the whole list, so a before/after capture across a query family
+  * pays the sbt+Spark startup once. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)

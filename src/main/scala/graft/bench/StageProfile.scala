@@ -1,6 +1,5 @@
 package graft.bench
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import graft.{Sessions, SparkEntry}
 
@@ -8,9 +7,9 @@ import graft.{Sessions, SparkEntry}
   * `runMain graft.bench.StageProfile <query>[,<query>...] [sfDir] [cpus]`.
   * The bench gives per-query totals; this answers WHERE inside a query
   * the time goes (guide §1.1/§7.1 without the UI, which the sessions
-  * keep disabled): one warm-up pass, then a timed pass with a stage
-  * listener printing duration / task count / shuffle bytes per stage,
-  * sorted by duration. Measurement tooling only — no query semantics. */
+  * keep disabled): one warm-up pass, then a timed pass with a
+  * [[StageListener]] printing duration / task count / shuffle bytes per
+  * stage, sorted by duration. Measurement tooling only — no query semantics. */
 object StageProfile {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(',').map(_.trim).filter(_.nonEmpty)
@@ -21,24 +20,7 @@ object StageProfile {
       SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Sessions.quietBenignWarnings()
-    case class St(id: Int, name: String, ms: Long, tasks: Int,
-        sread: Long, swrite: Long, input: Long)
-    val stages = scala.collection.mutable.ArrayBuffer[St]()
-    val listener = new SparkListener {
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        val i = s.stageInfo
-        val ms = for {
-          a <- i.completionTime; b <- i.submissionTime
-        } yield a - b
-        stages.synchronized {
-          stages += St(i.stageId, i.name.takeWhile(_ != '\n'),
-            ms.getOrElse(-1L), i.numTasks,
-            i.taskMetrics.shuffleReadMetrics.totalBytesRead,
-            i.taskMetrics.shuffleWriteMetrics.bytesWritten,
-            i.taskMetrics.inputMetrics.bytesRead)
-        }
-      }
-    }
+    val listener = new StageListener
     names.foreach { name =>
       def run(): Double = {
         val t0 = System.nanoTime()
@@ -48,17 +30,18 @@ object StageProfile {
         (System.nanoTime() - t0) / 1e9
       }
       run() // warm-up
-      stages.clear()
+      listener.reset()
       spark.sparkContext.addSparkListener(listener)
       val sec = run()
       // drain the listener bus so the final stages are captured
       graft.Bench.drainListenerBus(spark.sparkContext)
       spark.sparkContext.removeSparkListener(listener)
+      val stages = listener.stages
       println(f"== $name: $sec%.2f s, ${stages.size} stages, " +
         f"${stages.map(_.tasks).sum} tasks ==")
       stages.sortBy(-_.ms).take(25).foreach { s =>
         println(f"  ${s.ms}%6d ms  tasks=${s.tasks}%4d  " +
-          f"sread=${s.sread}%9d  swrite=${s.swrite}%9d  in=${s.input}%9d  " +
+          f"sread=${s.shuffleRead}%9d  swrite=${s.shuffleWrite}%9d  in=${s.input}%9d  " +
           f"[${s.id}] ${s.name.take(90)}")
       }
     }

@@ -1,6 +1,5 @@
 package graft.compact
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetFileWriter}
@@ -29,37 +28,31 @@ import org.apache.spark.sql.types.StructType
   *    append matches or beats it.
   *  - oversized bucket → skip the concat, keep the parts (`_pNN` names).
   *
-  * Parquet dictionary encoding is OFF by default: on high-cardinality
-  * string payloads the dictionary path collapses (85 s vs 4.6 s on the
+  * Parquet dictionary encoding is OFF: on high-cardinality string
+  * payloads the dictionary path collapses (85 s vs 4.6 s on the
   * fixture), while zstd over time-sorted rows already captures the
-  * repetition dictionaries would. Re-enable per instance for
-  * low-cardinality tag-heavy data if output size dominates.
+  * repetition dictionaries would.
   */
-final case class CompactResult(files: Vector[FileMeta])
-
 class Compactor(
     spark: SparkSession,
     fs: FileSystem,
     timeColumn: String = "time",
     maxDesiredFileSizeBytes: Long = 100L << 20, // kompactor.ts:38
-    percentageMaxFileSize: Int = 30, //            kompactor.ts:39
     rowGroupTargetBytes: Long = 32L << 20,
-    dictionaryEncoding: Boolean = false,
     sortPartitionBytes: Long = 16L << 20,
     zorderColumns: Seq[String] = Nil) {
 
   /** 130% of target — above this an output is split (kompactor.ts:53-57,
-    * dead code in the reference, live here). */
+    * dead code in the reference, live here; 30 % is
+    * percentageMaxFileSize, kompactor.ts:39). */
   def largeCutoffBytes: Long =
-    maxDesiredFileSizeBytes + maxDesiredFileSizeBytes * percentageMaxFileSize / 100
-  def smallCutoffBytes: Long =
-    maxDesiredFileSizeBytes * percentageMaxFileSize / 100
+    maxDesiredFileSizeBytes + maxDesiredFileSizeBytes * 30 / 100
 
   /** Merge `bucket`'s files into 1..n time-sorted ZSTD parquet files under
     * `rootDir`. Returns the new FileMeta entries (real output sizes +
     * footer-exact row counts and time bounds — never input-sum estimates;
     * SURVEY.md §7.4 bug 3). */
-  def merge(rootDir: Path, bucket: Bucket): CompactResult = {
+  def merge(rootDir: Path, bucket: Bucket): Vector[FileMeta] = {
     val inputs = bucket.files.map(f => new Path(rootDir, f.path).toString)
     val readSchema = requireUniformSchema(rootDir, bucket)
     val totalBytes = bucket.files.map(_.size_bytes).sum
@@ -121,7 +114,7 @@ class Compactor(
       .mode("overwrite")
       .option("compression", "zstd")
       .option("parquet.block.size", rowGroupTargetBytes.toString)
-      .option("parquet.enable.dictionary", dictionaryEncoding.toString)
+      .option("parquet.enable.dictionary", "false")
       .parquet(tmpDir.toString)
 
     // part-NNNNN names sort in range order => concatenation order is the
@@ -160,7 +153,7 @@ class Compactor(
         }.toVector
       }
     fs.delete(tmpDir, true)
-    CompactResult(metas)
+    metas
   }
 
   /** A bucket whose input files disagree on schema must fail LOUDLY
@@ -308,5 +301,4 @@ object Compactor {
 
   def localFs(spark: SparkSession): FileSystem =
     FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-  def fsFor(path: Path, conf: Configuration): FileSystem = path.getFileSystem(conf)
 }

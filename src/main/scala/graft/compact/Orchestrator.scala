@@ -25,7 +25,6 @@ final case class CompactConfig(
     windowHours: Int = 1,
     timeColumn: String = "time",
     maxDesiredFileSizeBytes: Long = 100L << 20,
-    percentageMaxFileSize: Int = 30,
     bucketParallelism: Int = 4,
     // catalogs above this many file entries plan on executors
     // (Planner.planDistributed) instead of in driver memory
@@ -60,8 +59,7 @@ class Orchestrator(
     f
   }
   private val compactor = new Compactor(spark, fs, config.timeColumn,
-    config.maxDesiredFileSizeBytes, config.percentageMaxFileSize,
-    zorderColumns = config.zorderColumns)
+    config.maxDesiredFileSizeBytes, zorderColumns = config.zorderColumns)
 
   private def log(msg: String): Unit =
     if (config.verbose) System.err.println(s"[compact] $msg")
@@ -205,7 +203,7 @@ class Orchestrator(
 
     // merge every bucket (concurrent Spark jobs)
     val bucketPool = new java.util.concurrent.ForkJoinPool(bucketThreads)
-    val results: Vector[(Bucket, CompactResult)] =
+    val results: Vector[(Bucket, Vector[FileMeta])] =
       try {
         val par = runnable.par
         par.tasksupport = new ForkJoinTaskSupport(bucketPool)
@@ -216,7 +214,7 @@ class Orchestrator(
     // B12: surgical metadata rewrite, BEFORE any delete. Keyed by source
     // path (not db/table dir names) so no naming convention is assumed.
     val replacement: Map[String, Vector[FileMeta]] = results.flatMap { case (b, r) =>
-      b.sources.toVector.map(_ -> r.files)
+      b.sources.toVector.map(_ -> r)
     }.toMap
     // small catalogs reuse the snapshots parsed during planning (nothing
     // mutated them since — merges only add new data files); the
@@ -252,7 +250,7 @@ class Orchestrator(
     gcEmptyDirs(deleted.map(rel => new Path(root, rel).getParent).toSet)
 
     HostReport(host, runnable.length, results.length,
-      results.flatMap(_._2.files), deleted, skipped, missingAll, rewritten)
+      results.flatMap(_._2), deleted, skipped, missingAll, rewritten)
   }
 
   /** Replace merged source entries with their compacted file(s), table by

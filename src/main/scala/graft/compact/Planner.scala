@@ -168,26 +168,13 @@ object Planner {
     * metadata across snapshots: minimum under a total ordering over every
     * FileMeta field. Both [[plan]] (snapshot-order input) and
     * [[planDistributed]] (Spark's nondeterministic group-iterator order)
-    * route through this, so the surviving copy — and therefore
-    * rollupStats' row_count/min_time/max_time — is identical between the
-    * two paths and across runs (r4 ADVICE #3: distinctBy kept whichever
+    * route through this, so the surviving copy — and therefore the
+    * bucket's file list, whose head gives the output its id and
+    * chunk_time (`Compactor.merge`) — is identical between the two paths
+    * and across runs (r4 ADVICE #3: distinctBy kept whichever
     * copy arrived first, which differed per path and per run). */
   private def dedupByPath(ms: Iterable[FileMeta]): Vector[FileMeta] =
     ms.groupBy(_.path).valuesIterator.map(_.minBy(m =>
       (m.id, m.size_bytes, m.row_count, m.chunk_time, m.min_time, m.max_time)))
       .toVector
-
-  /** Aggregate statistics for the compacted file (operator B11): Long
-    * min/max (no 2^53 loss) and summed row counts. `size_bytes` is filled
-    * by the executor from the REAL output file length, fixing reference
-    * bug 3 (input-sum at kompactor.ts:275). */
-  def rollupStats(b: Bucket, outputSizeBytes: Long, newId: Long): FileMeta =
-    FileMeta(
-      id = newId,
-      path = b.outputPath,
-      size_bytes = outputSizeBytes,
-      row_count = b.files.map(_.row_count).sum,
-      chunk_time = b.files.head.chunk_time,
-      min_time = b.files.map(_.min_time).min,
-      max_time = b.files.map(_.max_time).max)
 }

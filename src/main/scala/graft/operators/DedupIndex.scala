@@ -73,7 +73,8 @@ object DedupIndex {
 
   /** The loaded artifact's table views. LAZY on purpose: merely
     * CREATING a DataFrame over a bucket-partitioned slab lists every
-    * bucket directory (seconds at B=4096 — SlabLayoutBench), so a
+    * bucket directory (seconds at B=4096 — BENCH_NOTES "Round 15:
+    * bucketed slab at deployment scale"), so a
     * consumer that goes through the pruned probe views
     * ([[probeBands]] / [[probePostings]], or [[serveNearDups]]'s
     * armed candidate join) must never pay for the full views it
@@ -392,8 +393,9 @@ object DedupIndex {
     // mount ONLY the probed bucket directories, never the slab root: a
     // filter over the root still pays partition DISCOVERY over all b
     // dirs (measured: 1.8 s at b=1024, 6.2 s at b=4096 on local FS —
-    // SlabLayoutBench), which is the exact cost the layout exists to
-    // avoid. Existence-check each probed dir (≤ keysHint cheap RPCs —
+    // BENCH_NOTES "Round 15: bucketed slab at deployment scale"), which
+    // is the exact cost the layout exists to avoid. Existence-check
+    // each probed dir (≤ keysHint cheap RPCs —
     // a bucket no corpus key hashed to has no dir) and read the
     // survivors with basePath so pb stays a partition column.
     val slabRoot = pathOf(dir, slots.head)
@@ -1223,7 +1225,8 @@ object DedupIndex {
       // its buckets' directories — since probeWindow reads probed dirs
       // directly, the fixed cost is ≤ keysHint existence RPCs + one
       // bucket collect, and the full-slab discovery (seconds at
-      // B=4096, SlabLayoutBench) is never paid. Flat artifacts (the
+      // B=4096, BENCH_NOTES Round 15 and Round 16 slab sections) is
+      // never paid. Flat artifacts (the
       // gate-scale default) fall back to the identical full view at
       // zero extra cost.
       val cand = DedupQueries

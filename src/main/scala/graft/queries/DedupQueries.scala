@@ -516,7 +516,8 @@ object DedupQueries {
     // the surviving pairs — a distinct on the raw candidate multiset
     // measured 2-3 s of pure shuffle at sf0.1 for zero extra pruning.
     // Re-measured at the 10x octave where the multiset is ~2n^2 rows
-    // (bench.D5Ab): filter-first 32.8 s vs distinct-first 62.2 s — the
+    // (BENCH_NOTES "Round 4: d5 verification order at the 10× octave"):
+    // filter-first 32.8 s vs distinct-first 62.2 s — the
     // pair shuffle dominates duplicate dot-products at every tested scale
     // quantized vectors: dim longs per row (+ norm) — broadcast ONLY
     // under the exact-count size bound (same 100x-octave AQE lesson as

@@ -30,8 +30,8 @@ class PlannerDistributedSpec extends AnyFunSuite {
     // r4 ADVICE #3: when the SAME path carries differing FileMeta across
     // snapshots, the surviving copy used to be first-arrival — snapshot
     // order on the in-memory path, Spark's nondeterministic group order
-    // on the distributed path — changing rollupStats between the two and
-    // between runs. Both now keep the min under a total field ordering,
+    // on the distributed path — changing the bucket's files (and so the
+    // output's id and chunk_time) between the two and between runs. Both now keep the min under a total field ordering,
     // independent of input order.
     import spark.implicits._
     val p1 = "h0/dbs/db-0/table-0/2025-01-26/05-00/0000000001.parquet"

@@ -196,19 +196,4 @@ class PlannerSpec extends AnyFunSuite {
     assert(buckets.length == 1)
     assert(skipped == Vector("not/a/valid/layout.parquet"))
   }
-
-  test("rollup stats use Long math above 2^53") {
-    val base = 1737928861362000000L
-    val b = Bucket("h", "db-0", "table-0", "2025-01-26", 5,
-      Vector(
-        FileMeta(1, "h/dbs/db-0/table-0/2025-01-26/05-00/0000000001.parquet",
-          100, 10, base, base + 1, base + 3),
-        FileMeta(2, "h/dbs/db-0/table-0/2025-01-26/05-30/0000000002.parquet",
-          100, 20, base, base + 2, base + 7)),
-      Set.empty)
-    val stats = Planner.rollupStats(b, outputSizeBytes = 555, newId = 1)
-    assert(stats.row_count == 30)
-    assert(stats.size_bytes == 555) // actual output size, not input sum
-    assert(stats.min_time == base + 1 && stats.max_time == base + 7)
-  }
 }

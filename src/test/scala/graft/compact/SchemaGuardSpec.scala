@@ -117,7 +117,7 @@ class SchemaGuardSpec extends AnyFunSuite {
       assert(spark.read.schema(explicit).parquet(inputs: _*).schema == inferred.schema)
       val expected = inferred.orderBy("time").collect().toSeq
 
-      val out = compactor.merge(root, b).files.map(f => new File(dir, f.path).toString)
+      val out = compactor.merge(root, b).map(f => new File(dir, f.path).toString)
       val merged = spark.read.parquet(out: _*)
       assert(merged.schema.fieldNames.toSeq == inferred.schema.fieldNames.toSeq)
       val rows = merged.collect().toSeq

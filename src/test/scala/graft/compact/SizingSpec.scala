@@ -47,21 +47,21 @@ class SizingSpec extends AnyFunSuite {
       maxDesiredFileSizeBytes = 64L * 1024)
     val result = compactor.merge(new Path(dir.toString), bucket)
 
-    assert(result.files.length > 1, s"expected split, got ${result.files.length}")
+    assert(result.length > 1, s"expected split, got ${result.length}")
     // exact naming contract with part suffixes
-    assert(result.files.forall(_.path.matches(
+    assert(result.forall(_.path.matches(
       ".*c_0000000001_0000000002_h22_p\\d\\d\\.parquet")))
     // per-file stats are real footer values; parts cover disjoint,
     // ascending time ranges; total row count preserved
-    assert(result.files.map(_.row_count).sum == 60000)
-    val ranges = result.files.map(f => (f.min_time, f.max_time))
+    assert(result.map(_.row_count).sum == 60000)
+    val ranges = result.map(f => (f.min_time, f.max_time))
     assert(ranges == ranges.sortBy(_._1))
     ranges.sliding(2).foreach {
       case Seq((_, aMax), (bMin, _)) => assert(aMax <= bMin)
       case _ => ()
     }
     // every part exists and is itself time-sorted
-    result.files.foreach { f =>
+    result.foreach { f =>
       val times = spark.read.parquet(new File(dir, f.path).toString)
         .select("time").collect().map(_.getLong(0))
       assert(times.sameElements(times.sorted))
@@ -74,8 +74,8 @@ class SizingSpec extends AnyFunSuite {
     val concat = new Compactor(spark, fs,
       maxDesiredFileSizeBytes = 1L << 30, sortPartitionBytes = 32L * 1024)
     val single = concat.merge(new Path(dir.toString), bucket)
-    assert(single.files.length == 1)
-    val f = single.files.head
+    assert(single.length == 1)
+    val f = single.head
     assert(f.path.endsWith("c_0000000001_0000000002_h22.parquet"))
     assert(f.row_count == 60000)
     val merged = spark.read.parquet(new File(dir, f.path).toString)
@@ -87,7 +87,7 @@ class SizingSpec extends AnyFunSuite {
     // REGRESSION: a bucket whose inputs include split parts (_pNN) plus a
     // late WAL file must re-plan (the part names carry the WAL range) and
     // re-merge rather than crash the planner
-    val partMetas = result.files
+    val partMetas = result
     val (relC, fc) = writeInput("0000000003.parquet", 900L, 1000)
     val lateMeta = FileMeta(3, relC, fc.length(), 1000, base,
       base + 900, base + 900 + 1000L * 1000003L)
@@ -98,8 +98,8 @@ class SizingSpec extends AnyFunSuite {
       reFiles.toVector, reFiles.map(_.path).toSet)
     assert(reBucket.firstWal == 1L && reBucket.lastWal == 3L)
     val refolded = concat.merge(new Path(dir.toString), reBucket)
-    assert(refolded.files.length == 1)
-    assert(refolded.files.head.path.endsWith("c_0000000001_0000000003_h22.parquet"))
-    assert(refolded.files.head.row_count == 61000)
+    assert(refolded.length == 1)
+    assert(refolded.head.path.endsWith("c_0000000001_0000000003_h22.parquet"))
+    assert(refolded.head.row_count == 61000)
   }
 }

@@ -51,7 +51,7 @@ class ZorderCompactSpec extends AnyFunSuite {
     val bucket = mkBucket(dir)
     val r = new Compactor(spark, Compactor.localFs(spark))
       .merge(new Path(dir.toString), bucket)
-    val out = new File(dir, r.files.head.path).toString
+    val out = new File(dir, r.head.path).toString
     val times = spark.read.parquet(out).select("time")
       .collect().map(_.getLong(0))
     assert(times.sameElements(times.sorted))
@@ -63,8 +63,8 @@ class ZorderCompactSpec extends AnyFunSuite {
     val bucket = mkBucket(dir)
     val r = new Compactor(spark, Compactor.localFs(spark),
       zorderColumns = Seq("sensor")).merge(new Path(dir.toString), bucket)
-    assert(r.files.length == 1)
-    val meta = r.files.head
+    assert(r.length == 1)
+    val meta = r.head
     val out = new File(dir, meta.path).toString
     val rows = spark.read.parquet(out).select("time", "sensor").collect()
     assert(rows.length == N && meta.row_count == N)
@@ -111,7 +111,7 @@ class ZorderCompactSpec extends AnyFunSuite {
       Set(rel))
     val r = new Compactor(spark, Compactor.localFs(spark),
       zorderColumns = Seq("host", "sensor")).merge(new Path(dir.toString), bucket)
-    val meta = r.files.head
+    val meta = r.head
     val out = new File(dir, meta.path).toString
     assert(spark.read.parquet(out).count() == N && meta.row_count == N)
     assert(meta.min_time == base &&
@@ -188,12 +188,12 @@ class ZorderCompactSpec extends AnyFunSuite {
     val tDir = Files.createTempDirectory("graft_zc_rg_t").toFile
     val rT = new Compactor(spark, Compactor.localFs(spark),
       rowGroupTargetBytes = 4096).merge(new Path(tDir.toString), mkBucket2(tDir))
-    val (tHit, tGroups) = admitted(new File(tDir, rT.files.head.path).toString)
+    val (tHit, tGroups) = admitted(new File(tDir, rT.head.path).toString)
     val zDir = Files.createTempDirectory("graft_zc_rg_z").toFile
     val rZ = new Compactor(spark, Compactor.localFs(spark),
       rowGroupTargetBytes = 4096, zorderColumns = Seq("host", "sensor"))
       .merge(new Path(zDir.toString), mkBucket2(zDir))
-    val (zHit, zGroups) = admitted(new File(zDir, rZ.files.head.path).toString)
+    val (zHit, zGroups) = admitted(new File(zDir, rZ.head.path).toString)
     assert(tGroups >= 4 && zGroups >= 4,
       s"need multiple row groups to measure pruning: t=$tGroups z=$zGroups")
     assert(tHit == tGroups,
