@@ -12,10 +12,12 @@ import scala.collection.parallel.ForkJoinTaskSupport
   * crash in between. Ours: write compacted → rewrite metadata → delete
   * originals → GC empty dirs (SURVEY.md §7.4 bug 5).
   *
-  * Buckets are embarrassingly parallel: each is an independent Spark job,
-  * submitted concurrently from driver threads (`bucketParallelism`). On a
-  * real cluster this keeps all executors busy even though each bucket's
-  * single-file sort is one task.
+  * Buckets are independent. A host's buckets that share a read schema
+  * are merged by one Spark write (`Compactor.mergeAll`, at most
+  * `MaxBucketsPerWrite` buckets each) with one task per bucket sort
+  * partition, so the driver submits one job per schema, not one per
+  * bucket. Footer reads, bucket planning, writes and per-bucket commits
+  * run on `bucketParallelism` driver threads.
   */
 final case class CompactConfig(
     dataDir: String,
@@ -201,15 +203,10 @@ class Orchestrator(
         skipped, missingAll, Vector.empty)
     }
 
-    // merge every bucket (concurrent Spark jobs)
-    val bucketPool = new java.util.concurrent.ForkJoinPool(bucketThreads)
+    // merge every bucket: one Spark write per read schema
     val results: Vector[(Bucket, Vector[FileMeta])] =
-      try {
-        val par = runnable.par
-        par.tasksupport = new ForkJoinTaskSupport(bucketPool)
-        par.map(b => b -> compactor.merge(root, b)).toVector
-          .sortBy(r => (r._1.db, r._1.table, r._1.date, r._1.hourStart))
-      } finally bucketPool.shutdown()
+      compactor.mergeAll(root, runnable, bucketThreads)
+        .sortBy(r => (r._1.db, r._1.table, r._1.date, r._1.hourStart))
 
     // B12: surgical metadata rewrite, BEFORE any delete. Keyed by source
     // path (not db/table dir names) so no naming convention is assumed.

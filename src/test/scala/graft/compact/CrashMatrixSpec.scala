@@ -17,7 +17,8 @@ import graft.TestSpark
   *      every parseable snapshot exists on disk — modulo a snapshot tmp
   *      that recovery will roll forward), and
   *   2. a second, un-faulted run converges: everything compacts, all
-  *      originals are gone, snapshots reference exactly the outputs.
+  *      originals are gone, snapshots reference exactly the outputs, and
+  *      no merge staging directory remains.
   */
 class CrashMatrixSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -139,6 +140,10 @@ class CrashMatrixSpec extends AnyFunSuite {
       val rows = spark.read
         .parquet(refs.map(p => new File(dir, p).toString): _*).count()
       assert(rows == 20L, s"failAt=$n: snapshot view has $rows rows, not 20")
+      // the merge's staging directory (both buckets share one write) is
+      // gone once a run completes, whatever the crashed run left there
+      assert(!new File(dir, s"edge0/${Compactor.StagingDir}").exists,
+        s"failAt=$n: staging directory left behind")
     }
   }
 }
