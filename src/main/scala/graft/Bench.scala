@@ -162,7 +162,10 @@ object Bench {
     val planJson = planMetrics.map { case (k, (t, sr, sw)) =>
       "\"" + k + s"""\":{"tasks":$t,"shuffle_read":$sr,"shuffle_write":$sw}"""
     }.mkString("{", ",", "}")
+    // what ran: the requested cores and the parallelism Spark used, so a
+    // reader (and the plan gate below) can tell fixtures apart
     val fileJson = render(fmt(3), sfDir).stripSuffix("}") +
+      s""","cpus":$cpus,"default_parallelism":${spark.sparkContext.defaultParallelism}""" +
       s""","spread":$spread,"plan_metrics":$planJson}"""
     // a targeted/filtered run must never replace the committed full-suite
     // baseline (r5 ADVICE: a 1-query run clobbered BENCH_OUT.json and the
@@ -186,23 +189,28 @@ object Bench {
     // stays untouched.
     try {
       val basePath = java.nio.file.Paths.get("BENCH_OUT.json")
-      val gate =
-        if (!java.nio.file.Files.exists(basePath)) Left("no BENCH_OUT.json")
-        else planGate(new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(basePath.toFile), planMetrics.toSeq)
+      val baseline =
+        if (!java.nio.file.Files.exists(basePath)) None
+        else Some(new com.fasterxml.jackson.databind.ObjectMapper()
+          .readTree(basePath.toFile))
+      val gate = baseline.toRight("no BENCH_OUT.json")
+        .flatMap(planGate(_, planMetrics.toSeq))
       gate match {
         case Left(why) => System.err.println(s"[plan-gate] skipped: $why")
         case Right((compared, flagged)) =>
-          val line = if (flagged.isEmpty)
+          val fixtures = baseline.flatMap(fixtureMismatch(_, sfDir, cpus))
+          val line = (if (flagged.isEmpty)
             s"plan shapes stable across $compared queries vs BENCH_OUT.json"
           else s"${flagged.size} plan-shape moves vs BENCH_OUT.json " +
-            "(code change, not host noise): " + flagged.mkString("; ")
+            "(code change, not host noise): " + flagged.mkString("; ")) +
+            fixtures.fold("")(f => s" [fixtures differ: $f]")
           System.err.println(s"[plan-gate] $line")
-          val fl = flagged.map(s => "\"" + s.replace("\"", "'") + "\"")
-            .mkString("[", ",", "]")
+          def str(v: String) = "\"" + v.replace("\"", "'") + "\""
+          val fl = flagged.map(str).mkString("[", ",", "]")
+          val fx = fixtures.fold("")(f => s""","fixtures_differ":${str(f)}""")
           java.nio.file.Files.writeString(
             java.nio.file.Paths.get("PLAN_GATE.json"),
-            s"""{"compared":$compared,"flagged":$fl}\n""")
+            s"""{"compared":$compared,"flagged":$fl$fx}\n""")
       }
     } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[plan-gate] skipped: ${e.getMessage}")
@@ -241,6 +249,20 @@ object Bench {
         }
       })
     }
+  }
+
+  /** Both fixtures, named, when `baseline` (a bench file's root node) ran
+    * another one than this run: its `sf` differs, or its `cpus` is present
+    * and differs (bench files before `cpus` was recorded lack it). Task
+    * counts and shuffle bytes then move with the fixture too, so a
+    * flagged move is not by itself a code change. */
+  def fixtureMismatch(baseline: com.fasterxml.jackson.databind.JsonNode,
+      sf: String, cpus: String): Option[String] = {
+    val bSf = Option(baseline.get("sf")).map(_.asText)
+    val bCpus = Option(baseline.get("cpus")).map(_.asText)
+    if (bSf.forall(_ == sf) && bCpus.forall(_ == cpus)) None
+    else Some(s"BENCH_OUT.json sf=${bSf.getOrElse("?")} cpus=" +
+      s"${bCpus.getOrElse("unrecorded")}, this run sf=$sf cpus=$cpus")
   }
 
   /** Block until every event posted so far has reached the listeners, so

@@ -29,6 +29,11 @@ object Graft {
     out
   }
 
+  /** [[materialized]] for an operator whose result IS its only pin (the
+    * graph loops return their last round's cache). */
+  private def materialized(cached: DataFrame): DataFrame =
+    materialized((cached, Seq(cached)))
+
   // ---- reference parity: the compactor ---------------------------------
 
   /** Run the InfluxDB3-layout Parquet + snapshot compactor (the
@@ -226,12 +231,8 @@ object Graft {
     * Pointer-jumping label propagation, O(log diameter) rounds.
     * Eagerly materialized (facade cache contract) — the last round's
     * cache is released before returning. */
-  def connectedComponents(pairs: DataFrame): DataFrame = {
-    val labels = operators.Components.connectedComponents(pairs)
-    val out = labels.localCheckpoint(true)
-    labels.unpersist()
-    out
-  }
+  def connectedComponents(pairs: DataFrame): DataFrame =
+    materialized(operators.Components.connectedComponents(pairs))
 
   // ---- similarity search (emb: `vec_id` long, `embedding` array<float>)
 
@@ -582,24 +583,16 @@ object Graft {
   /** p1's centrality over the stored pair graph. Eagerly materialized
     * (facade cache contract). */
   def pageRankFrom(spark: SparkSession, dir: String,
-      iters: Int = 5): DataFrame = {
-    val ranks = operators.DedupIndex.pageRankFrom(
-      operators.DedupIndex.load(spark, dir), iters)
-    val out = ranks.localCheckpoint(true)
-    ranks.unpersist()
-    out
-  }
+      iters: Int = 5): DataFrame =
+    materialized(operators.DedupIndex.pageRankFrom(
+      operators.DedupIndex.load(spark, dir), iters))
 
   /** p3's communities over the stored pair graph. Eagerly materialized
     * (facade cache contract). */
   def labelPropFrom(spark: SparkSession, dir: String,
-      rounds: Int = 3): DataFrame = {
-    val labels = operators.DedupIndex.labelPropFrom(
-      operators.DedupIndex.load(spark, dir), rounds)
-    val out = labels.localCheckpoint(true)
-    labels.unpersist()
-    out
-  }
+      rounds: Int = 3): DataFrame =
+    materialized(operators.DedupIndex.labelPropFrom(
+      operators.DedupIndex.load(spark, dir), rounds))
 
   // ---- text quality / packing (docs: doc_id, text [, lang]) -------------
 
@@ -711,12 +704,8 @@ object Graft {
     * (id, rank, deg) after `iters` exact power-iteration rounds —
     * centrality within the similarity graph (canonical selection, crawl
     * frontier). Eagerly materialized (facade cache contract). */
-  def pageRank(pairs: DataFrame, iters: Int = 5): DataFrame = {
-    val ranks = operators.PageRank.pageRank(pairs, iters)
-    val out = ranks.localCheckpoint(true)
-    ranks.unpersist()
-    out
-  }
+  def pageRank(pairs: DataFrame, iters: Int = 5): DataFrame =
+    materialized(operators.PageRank.pageRank(pairs, iters))
 
   /** Compressed-domain ANN: product quantization (m subspaces × k
     * centroids, exact int64 Lloyd fit), ADC candidate scan over the
@@ -891,10 +880,10 @@ object Graft {
     * neighbor-majority label (min-label tie-break). Partitions each
     * connected component into its dense sub-communities — duplication
     * clusters vs template hubs. 2 shuffles per round, linear in |E|;
-    * returns (id, community). The result is cached; unpersist when
-    * done. */
+    * returns (id, community). Eagerly materialized (facade cache
+    * contract). */
   def labelCommunities(pairs: DataFrame, rounds: Int = 3): DataFrame =
-    operators.LabelProp.propagate(pairs, rounds)
+    materialized(operators.LabelProp.propagate(pairs, rounds))
 
   /** Z-order (Morton) layout keys for multi-dimensional file
     * clustering: each axis is rank-equalized into 2^16 buckets

@@ -28,14 +28,19 @@ final case class DbTables(dbId: Long, tables: Vector[TableFiles])
 
 /** A `*.info.json` snapshot document (README.md:74-106). `databases` and
   * `tables` are JSON arrays of `[id, value]` 2-tuples — order is preserved
-  * for faithful rewrite. */
+  * for faithful rewrite. `extra` keeps the top-level fields the model does
+  * not name (sequence numbers, id counters, …): empty when there are
+  * none, else EVERY top-level field in document order, the modeled ones
+  * as `MissingNode` placeholders, so a rewrite keeps the key order. */
 final case class SnapshotMeta(
     writer_id: String,
     parquet_size_bytes: Long,
     row_count: Long,
     min_time: Long,
     max_time: Long,
-    databases: Vector[DbTables]) {
+    databases: Vector[DbTables],
+    extra: Vector[(String, com.fasterxml.jackson.databind.JsonNode)] =
+      Vector.empty) {
 
   def allFiles: Vector[FileMeta] =
     databases.flatMap(_.tables.flatMap(_.files))

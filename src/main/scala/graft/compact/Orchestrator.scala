@@ -2,6 +2,7 @@ package graft.compact
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.util.SerializableConfiguration
 import scala.collection.parallel.CollectionConverters._
 import scala.collection.parallel.ForkJoinTaskSupport
 
@@ -147,9 +148,12 @@ class Orchestrator(
       } else {
         import spark.implicits._
         import scala.jdk.CollectionConverters._
+        // the SESSION's configuration — including `spark.hadoop.*`
+        // object-store credentials/endpoints — reaches executor-side
+        // snapshot reads; a bare `new Configuration()` on the executor
+        // would drop all of those (r5 ADVICE #1)
         val bconf = spark.sparkContext.broadcast(
-          new Orchestrator.SerializableHadoopConf(
-            spark.sparkContext.hadoopConfiguration))
+          new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
         val entries = spark.createDataset(snapFiles.map(_.toString))
           .flatMap((s: String) => Orchestrator.snapshotEntriesOf(s, bconf.value))
         val (b, s) = Planner.planDistributed(spark,
@@ -222,7 +226,7 @@ class Orchestrator(
       case None => snapFiles.iterator.map(p => p -> SnapshotCodec.parse(readString(p)))
     }
     val rewritten = rewriteInput.flatMap { case (path, snap) =>
-      val next = rewriteSnapshot(snap, replacement)
+      val next = Orchestrator.rewriteSnapshot(snap, replacement)
       if (next == snap) None
       else {
         writeAtomic(path, SnapshotCodec.render(next))
@@ -248,36 +252,6 @@ class Orchestrator(
 
     HostReport(host, runnable.length, results.length,
       results.flatMap(_._2), deleted, skipped, missingAll, rewritten)
-  }
-
-  /** Replace merged source entries with their compacted file(s), table by
-    * table, keeping untouched files (unlike kompactor.ts:301's clobber). */
-  private def rewriteSnapshot(
-      snap: SnapshotMeta,
-      replacement: Map[String, Vector[FileMeta]]): SnapshotMeta = {
-    val next = snap.copy(databases = snap.databases.map { db =>
-      db.copy(tables = db.tables.map { t =>
-        val (merged, kept) = t.files.partition(f => replacement.contains(f.path))
-        if (merged.isEmpty) t
-        else {
-          val adds = merged.flatMap(f => replacement(f.path))
-            .distinctBy(_.path)
-            .filterNot(nf => kept.exists(_.path == nf.path))
-          t.copy(files = kept ++ adds)
-        }
-      })
-    })
-    if (next == snap) snap
-    else {
-      // top-level rollup stats reflect the post-compaction file set; Long
-      // arithmetic end-to-end (no 2^53 loss — SURVEY.md §7.4 bug 1)
-      val files = next.allFiles
-      next.copy(
-        parquet_size_bytes = files.map(_.size_bytes).sum,
-        row_count = files.map(_.row_count).sum,
-        min_time = if (files.isEmpty) next.min_time else files.map(_.min_time).min,
-        max_time = if (files.isEmpty) next.max_time else files.map(_.max_time).max)
-    }
   }
 
   /** Page `files` (all under `dir`) through the store's bulk-delete
@@ -424,22 +398,33 @@ object Orchestrator {
     * to the distributed branch early — the safe direction. */
   private[compact] val EstBytesPerEntry = 100L
 
-  /** Hadoop `Configuration` is not Java-serializable; the standard
-    * Writable-based wrapper so the SESSION's configuration — including
-    * `spark.hadoop.*` object-store credentials/endpoints — reaches
-    * executor-side snapshot reads. A bare `new Configuration()` on the
-    * executor would drop all of those (r5 ADVICE #1). */
-  final class SerializableHadoopConf(
-      @transient var value: org.apache.hadoop.conf.Configuration)
-      extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject()
-      value.write(out)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      value = new org.apache.hadoop.conf.Configuration(false)
-      value.readFields(in)
+  /** Replace merged source entries with their compacted file(s), table by
+    * table, keeping untouched files (unlike kompactor.ts:301's clobber). */
+  private[compact] def rewriteSnapshot(
+      snap: SnapshotMeta,
+      replacement: Map[String, Vector[FileMeta]]): SnapshotMeta = {
+    val next = snap.copy(databases = snap.databases.map { db =>
+      db.copy(tables = db.tables.map { t =>
+        val (merged, kept) = t.files.partition(f => replacement.contains(f.path))
+        if (merged.isEmpty) t
+        else {
+          val adds = merged.flatMap(f => replacement(f.path))
+            .distinctBy(_.path)
+            .filterNot(nf => kept.exists(_.path == nf.path))
+          t.copy(files = kept ++ adds)
+        }
+      })
+    })
+    if (next == snap) snap
+    else {
+      // top-level rollup stats reflect the post-compaction file set; Long
+      // arithmetic end-to-end (no 2^53 loss — SURVEY.md §7.4 bug 1)
+      val files = next.allFiles
+      next.copy(
+        parquet_size_bytes = files.map(_.size_bytes).sum,
+        row_count = files.map(_.row_count).sum,
+        min_time = if (files.isEmpty) next.min_time else files.map(_.min_time).min,
+        max_time = if (files.isEmpty) next.max_time else files.map(_.max_time).max)
     }
   }
 
@@ -458,7 +443,7 @@ object Orchestrator {
     * routed into the skip report. The `fsOverride` test seam stays
     * driver-only — this path is exercised with real filesystems. */
   private[compact] def snapshotEntriesOf(
-      pathStr: String, conf: SerializableHadoopConf): Vector[SnapEntry] = {
+      pathStr: String, conf: SerializableConfiguration): Vector[SnapEntry] = {
     val p = new org.apache.hadoop.fs.Path(pathStr)
     val fs = p.getFileSystem(conf.value)
     fs.setVerifyChecksum(false)

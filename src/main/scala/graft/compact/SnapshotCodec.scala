@@ -3,7 +3,7 @@ package graft.compact
 import com.fasterxml.jackson.core.JsonGenerator
 import com.fasterxml.jackson.core.util.{DefaultIndenter, DefaultPrettyPrinter}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+import com.fasterxml.jackson.databind.node.{ArrayNode, MissingNode, ObjectNode}
 import scala.jdk.CollectionConverters._
 
 /** JSON (de)serialization for [[SnapshotMeta]] using Jackson (ships inside
@@ -13,11 +13,16 @@ import scala.jdk.CollectionConverters._
   * of `[id, value]` 2-tuples (README.md:82-104; destructured at
   * kompactor.ts:190-191). Jackson's tree model handles the heterogeneous
   * tuples; codegen'd data-binding cannot, hence the hand round-trip.
-  * Unknown top-level fields are preserved verbatim so a rewrite is faithful
-  * for documents richer than the spec.
+  * Unknown top-level fields are preserved verbatim, in document order
+  * ([[SnapshotMeta.extra]]), as the reference's `JSON.parse` →
+  * `JSON.stringify` keeps them (kompactor.ts:167-170,309), so a rewrite is
+  * faithful for documents richer than the spec. Unknown keys INSIDE
+  * database and file objects are still not kept.
   */
 object SnapshotCodec {
   private val mapper = new ObjectMapper()
+  private val Modeled = Vector("writer_id", "parquet_size_bytes", "row_count",
+    "min_time", "max_time", "databases")
 
   /** Byte-exact `JSON.stringify(value, null, 2)` formatting
     * (kompactor.ts:309): `": "` key separator (Jackson's default is
@@ -46,6 +51,7 @@ object SnapshotCodec {
 
   def parse(json: String): SnapshotMeta = {
     val root = mapper.readTree(json)
+    val fields = root.properties().asScala.toVector.map(e => e.getKey -> e.getValue)
     SnapshotMeta(
       writer_id = root.path("writer_id").asText(),
       parquet_size_bytes = root.path("parquet_size_bytes").asLong(),
@@ -60,7 +66,11 @@ object SnapshotCodec {
           TableFiles(tableId, files)
         }.toVector
         DbTables(dbId, tables)
-      }.toVector)
+      }.toVector,
+      extra =
+        if (fields.forall(f => Modeled.contains(f._1))) Vector.empty
+        else fields.map { case (k, v) =>
+          k -> (if (Modeled.contains(k)) MissingNode.getInstance else v) })
   }
 
   private def parseFile(n: JsonNode): FileMeta = FileMeta(
@@ -73,16 +83,26 @@ object SnapshotCodec {
     max_time = n.path("max_time").asLong())
 
   /** Pretty 2-space render mirroring the reference's
-    * `JSON.stringify(..., null, 2)` output shape (kompactor.ts:309). */
+    * `JSON.stringify(..., null, 2)` output shape (kompactor.ts:309), in
+    * the parsed document's key order; modeled fields it lacked follow. */
   def render(m: SnapshotMeta): String = {
     val root = mapper.createObjectNode()
-    root.put("writer_id", m.writer_id)
-    root.put("parquet_size_bytes", m.parquet_size_bytes)
-    root.put("row_count", m.row_count)
-    root.put("min_time", m.min_time)
-    root.put("max_time", m.max_time)
-    val dbs = root.putArray("databases")
-    m.databases.foreach { db =>
+    val placed = m.extra.map(_._1).toSet
+    (m.extra ++ Modeled.filterNot(placed).map(_ -> MissingNode.getInstance)).foreach {
+      case (k, v) if !v.isMissingNode => root.set[JsonNode](k, v)
+      case ("writer_id", _) => root.put("writer_id", m.writer_id)
+      case ("parquet_size_bytes", _) =>
+        root.put("parquet_size_bytes", m.parquet_size_bytes)
+      case ("row_count", _) => root.put("row_count", m.row_count)
+      case ("min_time", _) => root.put("min_time", m.min_time)
+      case ("max_time", _) => root.put("max_time", m.max_time)
+      case _ => renderDatabases(root.putArray("databases"), m.databases)
+    }
+    mapper.writer(new StringifyPrinter).writeValueAsString(root)
+  }
+
+  private def renderDatabases(dbs: ArrayNode, databases: Vector[DbTables]): Unit =
+    databases.foreach { db =>
       val pair = dbs.addArray()
       pair.add(db.dbId)
       val obj = pair.addObject()
@@ -94,8 +114,6 @@ object SnapshotCodec {
         t.files.foreach(f => fs.add(renderFile(f)))
       }
     }
-    mapper.writer(new StringifyPrinter).writeValueAsString(root)
-  }
 
   private def renderFile(f: FileMeta): ObjectNode = {
     val n = mapper.createObjectNode()

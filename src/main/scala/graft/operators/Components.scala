@@ -15,8 +15,9 @@ import org.apache.spark.storage.StorageLevel
   * joins + one aggregate on the (small) labels table; the driver-side
   * loop is bounded control flow, not data movement. Labels only
   * decrease, so fixpoint ⇔ sum(label) unchanged — one cheap scalar agg
-  * per round on the cached result instead of a diff join. Superseded
-  * rounds are unpersisted as soon as their successor materializes.
+  * per round on the cached result instead of a diff join. The rounds run
+  * on [[Fixpoint.pinned]], which releases each superseded round as soon
+  * as its successor materializes.
   */
 object Components {
 
@@ -28,18 +29,19 @@ object Components {
     *         `unpersist()` it when done (the [[graft.Graft]] facade
     *         returns a checkpointed copy and releases it instead). All
     *         intermediate caches are dropped on every exit path,
-    *         including mid-loop failures and the non-convergence throw. */
+    *         including mid-loop failures and the non-convergence throw
+    *         (`IllegalStateException` once `maxRounds` rounds ran; with
+    *         pointer jumping that needs a diameter > 2^maxRounds). */
   def connectedComponents(pairs: DataFrame, maxRounds: Int = 20): DataFrame = {
     val spark = pairs.sparkSession
     // each round references the previous result 3× (propagate + both
     // sides of the jump self-join): without cutting the lineage the
     // LOGICAL plan of round k holds ~3^k copies of round 0's tree (OOMs
-    // the driver before round 10). `asLeaf` re-roots a materialized round
-    // on a LogicalRDD leaf, so every round's plan has constant depth —
-    // the iterative-DataFrame equivalent of GraphX's checkpoint cadence.
-    def asLeaf(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    // the driver before round 10). `asLeaf` re-roots a round on a
+    // LogicalRDD leaf (pinned and filled by the loop), so every round's
+    // plan has constant depth — the iterative-DataFrame equivalent of
+    // GraphX's checkpoint cadence.
+    def asLeaf(df: DataFrame): DataFrame = spark.createDataFrame(df.rdd, df.schema)
     val p = pairs.toDF("doc_a", "doc_b")
       .persist(StorageLevel.MEMORY_AND_DISK)
     // materialize BEFORE the multi-leg references below: the first round
@@ -52,54 +54,40 @@ object Components {
       p.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
       .persist(StorageLevel.MEMORY_AND_DISK)
     edges.count() // reads p's cache; round legs then read this one
-    // round 0 folds the first propagation: label = min(id, neighbors)
-    var labels = asLeaf(
-      edges.select(col("doc_a").as("id"), col("doc_b").as("label"))
-        .unionAll(edges.select(col("doc_a").as("id"), col("doc_a").as("label")))
-        .groupBy(col("id")).agg(min(col("label")).as("label")))
     def labelSum(df: DataFrame): Long = // coalesce: sum over zero rows is null
       df.agg(coalesce(sum(col("label")), lit(0L))).head().getLong(0)
-    // every exit path — success, mid-loop failure, non-convergence —
-    // releases p, edges, and any superseded round; only the RETURNED
-    // labels cache survives (ownership documented above)
     try {
-      var prevSum = labelSum(labels)
-      var converged = false
-      var rounds = 0
-      while (!converged && rounds < maxRounds) {
+      // the label sum is the job that fills each round's cache; the
+      // previous round's sum is held here, so no extra job runs
+      var prevSum = 0L
+      // round 0 folds the first propagation: label = min(id, neighbors)
+      val init = Fixpoint.pin(asLeaf(
+        edges.select(col("doc_a").as("id"), col("doc_b").as("label"))
+          .unionAll(edges.select(col("doc_a").as("id"), col("doc_a").as("label")))
+          .groupBy(col("id")).agg(min(col("label")).as("label"))))(
+        l => prevSum = labelSum(l))
+      val (labels, _) = Fixpoint.pinned(init, maxRounds, mustSettle = true) { prev =>
         val viaEdges = edges
-          .join(labels, edges("doc_a") === labels("id"))
+          .join(prev, edges("doc_a") === prev("id"))
           .select(col("doc_b").as("id"), col("label"))
-        val propagated = labels.select(col("id"), col("label")).unionAll(viaEdges)
+        val propagated = prev.select(col("id"), col("label")).unionAll(viaEdges)
           .groupBy(col("id")).agg(min(col("label")).as("label"))
         // pointer jump: label ← label(label); every label value is itself a
         // node id present in `propagated`, both sides keyed on unique ids →
         // the left join is 1:1 and coalesce keeps roots fixed
-        val next = asLeaf(propagated.as("x")
+        asLeaf(propagated.as("x")
           .join(propagated.select(col("id").as("jid"), col("label").as("jlabel")).as("y"),
             col("x.label") === col("y.jid"), "left")
           .select(col("x.id"), coalesce(col("y.jlabel"), col("x.label")).as("label")))
-        val nextSum = // materializes `next`'s cache...
-          try labelSum(next)
-          catch { case t: Throwable => next.unpersist(); throw t }
-        labels.unpersist() // ...so the superseded round can go
-        converged = nextSum == prevSum
-        prevSum = nextSum
-        labels = next
-        rounds += 1
+      } { (_, next) =>
+        val before = prevSum
+        prevSum = labelSum(next)
+        prevSum == before
       }
-      // silent divergence would surface only as an opaque downstream
-      // mismatch — fail loudly. With pointer jumping this needs a graph of
-      // diameter > 2^maxRounds, i.e. never in practice.
-      if (!converged)
-        throw new IllegalStateException(
-          s"connected-components did not converge within $maxRounds rounds")
-    } catch {
-      case t: Throwable => labels.unpersist(); throw t
+      labels.withColumnRenamed("label", "component")
     } finally {
       p.unpersist()
       edges.unpersist()
     }
-    labels.withColumnRenamed("label", "component")
   }
 }

@@ -27,9 +27,9 @@ import org.apache.spark.storage.StorageLevel
   * cached; each round is one hash join of the n-row label table onto it
   * plus one partial-aggregatable argmax (`max_by` over a (count, −label)
   * struct — a hash aggregate, NOT a per-node sort window), so 2
-  * shuffles per round, linear in |E|. The plan references the previous
-  * round once per round — depth linear in rounds, same class as
-  * [[PageRank]]; beyond ~20 rounds add Components' `asLeaf` cadence.
+  * shuffles per round, linear in |E|. The rounds are one LAZY fold:
+  * each round's plan references the previous round once, so plan depth
+  * grows linearly in rounds, bounded by the 20-round cap.
   */
 object LabelProp {
 
@@ -40,10 +40,11 @@ object LabelProp {
     *
     * Runs the LAZY round chain — one action evaluates all rounds with
     * no per-round barrier, which MEASURES faster at small fixed budgets
-    * (the gate's 3 rounds: 2.8 s vs 5.1 s for the pinned-loop variant
-    * at sf0.1 — per-round job+cache-write overhead dominates when each
-    * round is sub-second). For long budgets or graphs expected to
-    * converge, use [[propagateRuns]]: early exit + O(1) plan depth. */
+    * (the gate's 3 rounds: 2.8 s vs 5.1 s for a pinned per-round loop
+    * with an exact-fixed-point exit at sf0.1 — per-round job+cache-write
+    * overhead dominates when each round is sub-second). The two have
+    * not been compared at 5 or more rounds; a pinned form would run on
+    * [[Fixpoint.pinned]], as [[PageRank.pageRankRuns]] does. */
   def propagate(pairs: DataFrame, rounds: Int = 3): DataFrame = {
     require(rounds >= 1 && rounds <= 20,
       s"propagate rounds must be in [1,20] (unrolled oracle / plan depth), got $rounds")
@@ -61,75 +62,6 @@ object LabelProp {
       catch { case e: Throwable => out.unpersist(); throw e }
       out
     } finally edges.unpersist()
-  }
-
-  /** [[propagate]]'s PINNED-LOOP twin, returning the executed round
-    * count — the PageRank early-exit contract applied to LPA: after
-    * each round a bounded n-row check asks whether ANY label moved;
-    * `l_{t+1} = l_t` makes every later round identical (the update is
-    * a deterministic function of the previous labels), so stopping
-    * early provably returns the full unroll's output and the static
-    * `rounds`-CTE oracle stays exact. Synchronous LPA can also
-    * OSCILLATE (a 2-cycle never hits a fixed point — the lone edge
-    * swaps labels forever); oscillating graphs simply run the full
-    * budget, converged ones stop paying two |E|-row shuffles per
-    * skipped round. Per-round pins keep logical-plan depth O(1) per
-    * round — use this form for budgets beyond ~5 rounds or graphs
-    * expected to converge; the lazy [[propagate]] wins at small fixed
-    * budgets (measured trade in its scaladoc). */
-  def propagateRuns(pairs: DataFrame, rounds: Int = 3): (DataFrame, Int) = {
-    require(rounds >= 1 && rounds <= 20,
-      s"propagate rounds must be in [1,20] (unrolled oracle / plan depth), got $rounds")
-    // symmetrized edges cached once, PRE-PARTITIONED on the round-join
-    // key: the cached InMemoryRelation keeps its HashPartitioning(v), so
-    // every round's ShuffledHashJoin re-exchanges only the n-row label
-    // side — without the repartition the |E|-row edge cache re-shuffles
-    // on every round (measured 8.7 → ~3 s for 3 rounds at sf0.1)
-    val edges = symmetrize(pairs).repartition(col("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // materialize BEFORE the loop: each round's plan references this
-    // cache — unfilled, the round legs race to build it, each replaying
-    // the upstream pair pipeline (CacheDisciplineSpec)
-    edges.count()
-    var labels = edges.select(col("u").as("id"))
-      .distinct().withColumn("lab", col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    labels.count()
-    try {
-      var t = 0
-      var converged = false
-      while (t < rounds && !converged) {
-        val next = round(edges, labels).persist(StorageLevel.MEMORY_AND_DISK)
-        // until `labels = next`, the outer catch releases only the OLD
-        // labels — a failure in the count/convergence window would leave
-        // this round's pin stranded in the session cache
-        try {
-          // ONE job materializes the round AND answers the fixed-point
-          // question (the r16 PageRank fusion): the mover count fully
-          // evaluates `next` — filling its cache — while joining the
-          // n-row pinned label vectors. Exact fixed point ⇔ no label
-          // moved. The final round skips the check (nothing consumes it).
-          if (t + 1 < rounds) {
-            converged = next.as("n")
-              .join(labels.as("p"), col("n.id") === col("p.id"))
-              .filter(col("n.lab") =!= col("p.lab"))
-              .count() == 0L
-          } else next.count()
-          t += 1
-        } catch { case e: Throwable => next.unpersist(); throw e }
-        labels.unpersist()
-        labels = next
-      }
-      // the result is a RENAME-ONLY projection of the final pinned
-      // round, which the cache manager canonicalizes to the SAME cache
-      // entry — so the final round's (already materialized) cache IS
-      // the caller-owned result cache: a second persist here would be
-      // a no-op duplicate, and unpersisting `labels` would drop the
-      // very blocks the returned frame serves from (the r9 p3
-      // CacheDisciplineSpec catch). Caller unpersists the result.
-      (labels.select(col("id"), col("lab").as("community")), t)
-    } catch { case e: Throwable => labels.unpersist(); throw e }
-    finally edges.unpersist()
   }
 
   /** The same pipeline with no caching or materialization — for plan

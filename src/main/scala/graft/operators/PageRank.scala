@@ -25,10 +25,9 @@ import org.apache.spark.storage.StorageLevel
   * Shape at scale: a fixed small number of rounds, each one join of
   * ranks (n rows) onto the cached degree-annotated edge list plus one
   * map-side-combined aggregate on the destination — 2 shuffles per
-  * round, linear in |E|. The plan references the previous round once,
-  * so logical-plan depth grows linearly in rounds (unlike the 3×
-  * self-reference in Components that needs per-round lineage cuts);
-  * for iters beyond ~20, add the same `asLeaf` cadence.
+  * round, linear in |E|. The rounds run on [[Fixpoint.pinned]]: each
+  * round's plan references only the previous round's filled cache, so
+  * logical-plan depth is O(1) per round at any `iters`.
   */
 object PageRank {
   val Scale: Long = 1000000000L
@@ -52,12 +51,7 @@ object PageRank {
     * many rounds actually executed. Converged graphs (stars, small
     * diameters, re-runs on already-ranked snapshots) stop paying for
     * |E|-row joins the moment the answer stops changing — on a 100 TB
-    * edge list each skipped round is two full shuffles.
-    *
-    * Each round's ranks are pinned and the previous round's pin
-    * released, so logical-plan depth is O(1) per round regardless of
-    * `iters` (the lazy-chain form grew linearly and needed an `asLeaf`
-    * cadence beyond ~20 rounds). */
+    * edge list each skipped round is two full shuffles. */
   def pageRankRuns(pairs: DataFrame, iters: Int = 5): (DataFrame, Int) = {
     require(iters >= 1 && iters <= 20,
       s"pageRank iters must be in [1,20] (unrolled oracle / plan depth), got $iters")
@@ -84,64 +78,43 @@ object PageRank {
       // n-row ranks side instead of re-shuffling the |E|-row edge cache
       .repartition(col("u"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // materialize BEFORE the loop: each round's plan references this
-    // cache, and unfilled those references race to build it — each
-    // replaying the upstream (LSH) pair generation (the s3-class
-    // defect; CacheDisciplineSpec / r8). Reading through contribEdges
-    // also fills deg's cache; p's cache is then no longer referenced.
-    contribEdges.count()
-    p.unpersist()
-    var ranks = deg.select(col("u").as("id"), lit(Scale).as("rank"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    ranks.count()
     try {
-      var t = 0
-      var converged = false
-      while (t < iters && !converged) {
+      // materialize BEFORE the loop: each round's plan references this
+      // cache, and unfilled those references race to build it — each
+      // replaying the upstream (LSH) pair generation (the s3-class
+      // defect; CacheDisciplineSpec / r8). Reading through contribEdges
+      // also fills deg's cache; p's cache is then no longer referenced.
+      contribEdges.count()
+      p.unpersist()
+      val init = Fixpoint.pin(
+        deg.select(col("u").as("id"), lit(Scale).as("rank")))(_.count())
+      val (ranks, t) = Fixpoint.pinned(init, iters, mustSettle = false) { prev =>
         // the cached edge side carries exact in-memory stats, so Catalyst
         // broadcasts it when small; the hint only rules out sort-merge
         // (per-round sorts) when it IS too big to broadcast — hash
         // builds on the cached side are partition-bounded at any |E|
-        val next = contribEdges.hint("shuffle_hash")
-          .join(ranks, contribEdges("u") === ranks("id"))
+        contribEdges.hint("shuffle_hash")
+          .join(prev, contribEdges("u") === prev("id"))
           .select(col("v"), expr("rank div deg").as("c"))
           .groupBy(col("v"))
           .agg(expr(s"$Jump + (85 * sum(c)) div 100").as("rank"))
           .select(col("v").as("id"), col("rank"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        // until `ranks = next`, the outer finally releases only the OLD
-        // ranks — a failure in the count/convergence window would leave
-        // this round's pin stranded in the session cache
-        try {
-          // ONE job materializes the round AND answers the fixed-point
-          // question (r16: the old count()-then-isEmpty shape paid two
-          // cluster barriers per round): the mover count fully evaluates
-          // `next` — filling its cache — while joining the n-row pinned
-          // rank vectors. Exact fixed point ⇔ no node's integer rank
-          // moved. The final round skips the check (nothing consumes it).
-          if (t + 1 < iters) {
-            converged = next.as("n")
-              .join(ranks.as("p"), col("n.id") === col("p.id"))
-              .filter(col("n.rank") =!= col("p.rank"))
-              .count() == 0L
-          } else next.count()
-          t += 1
-        } catch { case e: Throwable => next.unpersist(); throw e }
-        ranks.unpersist()
-        ranks = next
+      } { (prev, next) =>
+        // the mover count fully evaluates `next` while joining the n-row
+        // pinned rank vectors: exact fixed point ⇔ no integer rank moved
+        next.as("n").join(prev.as("p"), col("n.id") === col("p.id"))
+          .filter(col("n.rank") =!= col("p.rank"))
+          .count() == 0L
       }
-      val out = ranks.join(deg, ranks("id") === deg("u"))
-        .select(col("id"), col("rank"), col("deg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
       // materialize while contribEdges is still pinned; the RESULT cache
       // is then self-contained and (like Components) CALLER-owned —
       // unpersist it when done
-      try out.count()
-      catch { case e: Throwable => out.unpersist(); throw e }
-      (out, t)
+      try (Fixpoint.pin(ranks.join(deg, ranks("id") === deg("u"))
+        .select(col("id"), col("rank"), col("deg")))(_.count()), t)
+      finally ranks.unpersist()
     } finally {
       p.unpersist() // idempotent (released after contribEdges.count)
-      deg.unpersist(); contribEdges.unpersist(); ranks.unpersist()
+      deg.unpersist(); contribEdges.unpersist()
     }
   }
 

@@ -574,11 +574,16 @@ class GraftFacadeSpec extends AnyFunSuite {
         .as("series_h"))
     assert(Graft.zorderKeys(zin, "event_id", "ts_us", "series_h")
       .collect().toSet == q("q52_zorder_layout").collect().toSet)
+    // the registry queries above keep their pins until the harness's
+    // clearCache(); facade calls must leave nothing behind
+    spark.catalog.clearCache()
     val pairs = Graft.nearDupPairs(docs).select(col("doc_a"), col("doc_b"))
-    val viaFacade = Graft.labelCommunities(pairs)
+    val viaFacade = Graft.labelCommunities(pairs).collect().toSet
+    // facade cache contract: nothing left pinned behind the call
+    assert(spark.sharedState.cacheManager.isEmpty)
     val viaQuery = q("p3_label_prop")
-    assert(viaFacade.collect().toSet == viaQuery.collect().toSet)
-    Seq(viaFacade, viaQuery).foreach(_.unpersist())
+    assert(viaFacade == viaQuery.collect().toSet)
+    viaQuery.unpersist()
     spark.catalog.clearCache()
   }
 }

@@ -4,7 +4,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `Bench.planGate`: the tolerance edges, the query intersection, and a
-  * baseline that cannot be compared. */
+  * baseline that cannot be compared; `Bench.fixtureMismatch`: when the
+  * baseline ran another fixture. */
 class PlanGateSpec extends AnyFunSuite {
   private val MiB = 1L << 20
   private def baseline(json: String) = new ObjectMapper().readTree(json)
@@ -46,5 +47,17 @@ class PlanGateSpec extends AnyFunSuite {
     val r = Bench.planGate(baseline("""{"metric":"total","value":1.0}"""),
       Seq("big" -> ((100L, 100 * MiB, 100 * MiB))))
     assert(r.swap.exists(_.contains("plan_metrics")), r)
+  }
+
+  test("fixtures are named when sf differs, or cpus is recorded and differs") {
+    // a baseline from before `cpus` was recorded: only sf can differ
+    val old = baseline("""{"sf":"/data/sf0.1","plan_metrics":{}}""")
+    assert(Bench.fixtureMismatch(old, "/data/sf0.1", "4").isEmpty)
+    assert(Bench.fixtureMismatch(old, "/data/sf0.01", "4").contains(
+      "BENCH_OUT.json sf=/data/sf0.1 cpus=unrecorded, this run sf=/data/sf0.01 cpus=4"))
+    val recorded = baseline("""{"sf":"/data/sf0.1","cpus":32,"plan_metrics":{}}""")
+    assert(Bench.fixtureMismatch(recorded, "/data/sf0.1", "32").isEmpty)
+    assert(Bench.fixtureMismatch(recorded, "/data/sf0.1", "4").contains(
+      "BENCH_OUT.json sf=/data/sf0.1 cpus=32, this run sf=/data/sf0.1 cpus=4"))
   }
 }

@@ -196,4 +196,42 @@ class PlannerSpec extends AnyFunSuite {
     assert(buckets.length == 1)
     assert(skipped == Vector("not/a/valid/layout.parquet"))
   }
+
+  test("unknown top-level fields survive a compaction rewrite unchanged, in place") {
+    // a snapshot richer than the README's fields (InfluxDB 3 carries id
+    // counters and sequence numbers); one > 2^53 on purpose
+    val json =
+      """{"writer_id": "w", "next_file_id": 9007199254740993,
+        | "parquet_size_bytes": 200, "row_count": 20,
+        | "min_time": 1737928861362000000, "max_time": 1737928861362000999,
+        | "databases": [[0, {"tables": [[0, [
+        |   {"id": 1, "path": "h/dbs/db-0/table-0/2025-01-26/22-00/0000000001.parquet",
+        |    "size_bytes": 100, "row_count": 10, "chunk_time": 0,
+        |    "min_time": 1737928861362000000, "max_time": 1737928861362000999},
+        |   {"id": 2, "path": "h/dbs/db-0/table-0/2025-01-26/22-10/0000000002.parquet",
+        |    "size_bytes": 100, "row_count": 10, "chunk_time": 0,
+        |    "min_time": 1737928861362000000, "max_time": 1737928861362000999}]]]}]],
+        | "removed_files": [], "wal_file_sequence_number": 7,
+        | "catalog": {"sequence": 3, "tags": ["a", {"b": null}]}}""".stripMargin
+    val snapIn = SnapshotCodec.parse(json)
+    val (buckets, _) = Planner.plan(Seq(snapIn))
+    assert(buckets.length == 1)
+    val merged = fm("h/dbs/db-0/table-0/2025-01-26/22-00/c_0000000001_0000000002_h22.parquet",
+      rows = 20, id = 3)
+    val out = Orchestrator.rewriteSnapshot(snapIn,
+      buckets.head.sources.map(_ -> Vector(merged)).toMap)
+    assert(out.allFiles == Vector(merged) && out.row_count == 20)
+    val rendered = SnapshotCodec.render(out)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val (before, after) = (mapper.readTree(json), mapper.readTree(rendered))
+    def keys(n: com.fasterxml.jackson.databind.JsonNode) = {
+      import scala.jdk.CollectionConverters._
+      n.properties().asScala.toVector.map(_.getKey)
+    }
+    assert(keys(after) == keys(before), "top-level key order changed")
+    Seq("next_file_id", "removed_files", "wal_file_sequence_number", "catalog")
+      .foreach(k => assert(after.get(k) == before.get(k), k))
+    assert(rendered.contains("\"next_file_id\": 9007199254740993,\n"))
+    assert(SnapshotCodec.render(SnapshotCodec.parse(rendered)) == rendered)
+  }
 }

@@ -59,29 +59,4 @@ class LabelPropSpec extends AnyFunSuite {
       assert(run(pairs, r) == replay(pairs, r), s"rounds=$r")
     }
   }
-
-  test("exact fixed point exits early with output identical to the full unroll") {
-    // a triangle hits its fixed point at round 2 (all labels 1); round
-    // 3's check sees l3 = l2 and stops — output provably equals any
-    // larger budget, so the unrolled oracle stays exact
-    val tri = Seq[(Long, Long)]((1L, 2L), (2L, 3L), (1L, 3L))
-    assert(replay(tri, 2) == replay(tri, 3), "premise: fixed point at 2")
-    val (df, rounds) = LabelProp.propagateRuns(tri.toDF("a", "b"), 5)
-    val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    df.unpersist()
-    assert(rounds == 3, s"triangle should stop after confirming round 3, ran $rounds")
-    assert(got == replay(tri, 5), "early-exited output diverged from the unroll")
-  }
-
-  test("an oscillating graph never converges and runs the full budget") {
-    // the lone edge swaps labels every round — synchronous LPA's
-    // classic 2-cycle; the exact-fixed-point check must never fire
-    val edge = Seq[(Long, Long)]((1L, 2L))
-    (1 to 4).foreach(r => assert(replay(edge, r) != replay(edge, r - 1)))
-    val (df, rounds) = LabelProp.propagateRuns(edge.toDF("a", "b"), 4)
-    val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    df.unpersist()
-    assert(rounds == 4, s"2-cycle must run the full budget, ran $rounds")
-    assert(got == replay(edge, 4))
-  }
 }
