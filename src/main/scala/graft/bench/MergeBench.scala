@@ -21,7 +21,6 @@ object MergeBench {
     val nFiles = args.lift(1).map(_.toInt).getOrElse(12)
     val spark = Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
 
     // optional 3rd arg: fixture dir — files already present are reused
     // (re-time merges under different host conditions without 15 min of

@@ -3,14 +3,15 @@ package graft.compact
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetFileWriter}
+import org.apache.parquet.hadoop.metadata.BlockMetaData
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession, graftbridge}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.{Column, SparkSession, graftbridge}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetToSparkSchemaConverter}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import java.nio.ByteOrder
 import java.util.concurrent.ForkJoinPool
 import scala.collection.parallel.CollectionConverters._
 import scala.collection.parallel.ForkJoinTaskSupport
@@ -23,8 +24,9 @@ import scala.collection.parallel.ForkJoinTaskSupport
   *
   * Physical strategy per bucket (measured on a 123 MB / 4.8M-row fixture
   * against the reference's own engine replaying its exact COPY query):
-  *  - scan → `repartitionByRange(k, time)` → per-partition sort → k
-  *    time-disjoint sorted zstd parts written IN PARALLEL;
+  *  - `kSort` time ranges, one per ~`sortPartitionBytes` of input →
+  *    per-partition sort → k time-disjoint sorted zstd parts written IN
+  *    PARALLEL;
   *  - single-file contract → the parts are then byte-concatenated at the
   *    ROW-GROUP level (`ParquetFileReader.appendTo`: no decode, no
   *    re-encode — an I/O-bound driver-side copy). A naive
@@ -33,10 +35,21 @@ import scala.collection.parallel.ForkJoinTaskSupport
   *    append matches or beats it.
   *  - oversized bucket → skip the concat, keep the parts (`_pNN` names).
   *
-  * Buckets are not separate Spark jobs: [[mergeAll]] writes a host's
-  * buckets that share a read schema with one job per 64 buckets (each
-  * bucket's sort partitions side by side), then commits each bucket from
-  * its own part files. [[merge]] is the one-bucket case.
+  * Buckets are not separate Spark plans: [[mergeAll]] writes a host's
+  * buckets that share a read schema with one scan and one job, the
+  * one-partition buckets and the range-sorted ones apart, and cuts the
+  * scan's partitions itself from the input footers:
+  *  - a one-partition bucket is one scan partition, so its write has no
+  *    exchange and part `j` is bucket `j`;
+  *  - a range-sorted bucket's files are packed into scan partitions of
+  *    ~`sortPartitionBytes`, and each row goes to part `base(bucket) +
+  *    range(time)` through one pass-through exchange (`repartitionById`).
+  *    The ranges are cut at equal row fractions of the inputs' page (or
+  *    row-group) time ranges: no sample job, and a re-run writes the same
+  *    parts. Their blind spot: pages not in time order (files sorted by
+  *    series first) whose rows bunch in time.
+  * Each bucket then commits from its own slice of the parts. [[merge]]
+  * is the one-bucket case.
   *
   * Parquet dictionary encoding is OFF: on high-cardinality string
   * payloads the dictionary path collapses (85 s vs 4.6 s on the
@@ -51,6 +64,7 @@ class Compactor(
     rowGroupTargetBytes: Long = 32L << 20,
     sortPartitionBytes: Long = 16L << 20,
     zorderColumns: Seq[String] = Nil) {
+  import Compactor._
 
   /** 130% of target — above this an output is split (kompactor.ts:53-57,
     * dead code in the reference, live here; 30 % is
@@ -66,28 +80,15 @@ class Compactor(
   def merge(rootDir: Path, bucket: Bucket): Vector[FileMeta] =
     mergeAll(rootDir, Vector(bucket)).head._2
 
-  /** Merge every bucket, each planned and committed exactly as [[merge]]
-    * would, but with one Spark write per (host, read schema) instead of
-    * one per bucket (at most `MaxBucketsPerWrite` buckets per write).
-    * Each bucket's sorted frame keeps its own `kSort` partitions; a
-    * write's frames are concatenated as RDDs (`SparkContext.union` of
-    * partitioner-less RDDs appends partitions, it never zips them) and
-    * written once into the host's staging directory, and each bucket
-    * takes the part files of its own partition slice. This takes the
-    * per-bucket job cost (write command, commit-protocol setup, job
-    * submission), which dominated small buckets, off all but one bucket
-    * of each write.
+  /** Merge every bucket, each sized and committed exactly as [[merge]]
+    * would, with one Spark write per (host, read schema, range-sorted or
+    * not) into the host's staging directory. A write pays the per-bucket
+    * costs (planning, write command, commit setup, job submission) once,
+    * and a task carries only its own scan partition, so writes are not
+    * capped. The footers come first: they decide the writes.
     *
-    * The read schemas (footer reads) come first, for every bucket, as
-    * they decide the writes. Each write's buckets are then planned,
-    * written and committed before their plans are dropped, so the plans
-    * alive at once (and the shuffle output of range-sorted buckets, which
-    * planning produces) grow with the writes in flight, about
-    * `parallelism` × `MaxBucketsPerWrite` buckets, not with the host; and
-    * one write's planning overlaps another's job.
-    *
-    * `parallelism` bounds the driver threads that run writes, plan
-    * buckets and commit them. The staging directory is per host and is
+    * `parallelism` bounds the driver threads that read footers, run
+    * writes and commit buckets. The staging directory is per host and is
     * removed whole before and after the writes, so at most one call per
     * host may run at a time. Returns each bucket with its new FileMeta
     * entries, in input order. */
@@ -104,116 +105,124 @@ class Compactor(
       case _ => xs.map(f)
     }
     val bs = buckets.toVector
-    def stagingOf(host: String) = new Path(rootDir, s"$host/${Compactor.StagingDir}")
+    def stagingOf(host: String) = new Path(rootDir, s"$host/$StagingDir")
     // one staging directory per host, removed before the writes and after
     // the last commit: a crash leaves at most that one directory, which
     // the next run removes before it writes
     val staging = bs.map(b => stagingOf(b.host)).distinct
     try {
       staging.foreach(fs.delete(_, true))
-      val schemas = each(bs)(requireUniformSchema(rootDir, _))
-      val writes = bs.indices.groupBy(i => (bs(i).host, schemas(i)))
-        .values.toVector.sortBy(_.head)
-        .flatMap(_.grouped(Compactor.MaxBucketsPerWrite)).map(_.toVector)
-      val metas = each(writes.zipWithIndex) { case (members, w) =>
-        val plans = each(members)(i => planMerge(rootDir, bs(i), i, schemas(i)))
-        val parts = writeGroup(plans, new Path(stagingOf(bs(members.head).host), s"g$w"))
-        each(parts) { case (p, files) => p.idx -> commitBucket(rootDir, p, files) }
+      val members = each(bs.indices.toVector)(i => new Member(i, bs(i), rootDir))
+      val writes = members.groupBy(m => (m.bucket.host, m.schema, m.kSort > 1))
+        .values.toVector.sortBy(_.head.idx)
+      val metas = each(writes.zipWithIndex) { case (group, w) =>
+        val parts = writeGroup(group, new Path(stagingOf(group.head.bucket.host), s"g$w"))
+        each(parts) { case (m, files) => m.idx -> commitBucket(rootDir, m, files) }
       }.flatten.toMap
       staging.foreach(fs.delete(_, true))
       bs.indices.toVector.map(i => bs(i) -> metas(i))
     } finally pool.foreach(_.shutdown())
   }
 
-  /** One bucket's merge, planned but not yet written: the sort
-    * parallelism and split decision, and the sorted frame's physical
-    * RDD. That RDD has `kSort` partitions, or fewer when a range sort
-    * finds fewer distinct keys than `kSort` (Spark's RangePartitioner). */
-  private final class MergePlan(val idx: Int, val bucket: Bucket,
-      val kSort: Int, val split: Boolean, val sorted: DataFrame) {
-    // planning happens here, on the calling thread; for a range-sorted
-    // bucket that includes running its shuffle
-    val rows: RDD[InternalRow] = sorted.queryExecution.toRdd
-    val width: Int = rows.getNumPartitions
-    if (width > kSort) throw new IllegalStateException(s"bucket ${bucket.outputPath}: " +
-      s"sorted frame has $width partitions, planned $kSort")
-  }
-
-  private def planMerge(rootDir: Path, bucket: Bucket, idx: Int, readSchema: StructType)
-      : MergePlan = {
+  /** One bucket's merge: its inputs, its `kSort` sort partitions (one per
+    * ~`sortPartitionBytes` of input, whatever the output file count), and
+    * whether it is `split` into `_pNN` files. */
+  private final class Member(val idx: Int, val bucket: Bucket, rootDir: Path) {
+    private val totalBytes = bucket.files.map(_.size_bytes).sum
+    private val nOut = math.max(1, math.ceil(totalBytes.toDouble / maxDesiredFileSizeBytes).toInt)
+    val split: Boolean = totalBytes > largeCutoffBytes && nOut > 1
+    val kSort: Int = math.max(if (split) nOut else 1, math.min(
+      spark.sparkContext.defaultParallelism,
+      math.ceil(totalBytes.toDouble / sortPartitionBytes).toInt))
     // a bucket merged by an older release staged its parts in its own
     // output directory; a crash there left one behind
     Option(fs.globStatus(new Path(rootDir, s"${bucket.outputDir}/.tmp_c_*")))
       .foreach(_.foreach(st => fs.delete(st.getPath, true)))
-    val inputs = bucket.files.map(f => new Path(rootDir, f.path).toString)
-    val totalBytes = bucket.files.map(_.size_bytes).sum
-    val nOut = math.max(1, math.ceil(totalBytes.toDouble / maxDesiredFileSizeBytes).toInt)
-    val split = totalBytes > largeCutoffBytes && nOut > 1
+    val (schema, files) = readInputs(rootDir, bucket, timeRanges = kSort > 1)
+    // the z-order grid spans the bucket's own time window
+    val lo: Long = bucket.files.map(_.min_time).min
+    val span: Long = math.max(1L, bucket.files.map(_.max_time).max - lo)
 
-    // sort parallelism: one task per ~sortPartitionBytes of input,
-    // independent of how many OUTPUT files the contract wants
-    val kSort = math.max(if (split) nOut else 1, math.min(
-      spark.sparkContext.defaultParallelism,
-      math.ceil(totalBytes.toDouble / sortPartitionBytes).toInt))
-    // explicit schema: the footers are already read, so Spark's schema
-    // inference (one extra job per bucket) has nothing left to learn
-    val df = spark.read.schema(readSchema).parquet(inputs: _*)
-    // Opt-in z-order layout (like the sizing knobs: a capability the
-    // reference's config shape implies but its ORDER BY time never uses):
-    // within ONE bucket the time axis is already window-bounded with
-    // known metadata min/max, so a FIXED-GRID interleave — time scaled
-    // into B bits by the bucket's own span × B hash bits per tag column
-    // — is the z-curve with ZERO extra passes (q52's rank equalization
-    // needs two rank shuffles; here the window bound does the
-    // equalizing). N AXES (r7 verdict #9): time is axis 0 plus one hash
-    // axis per --zorder-col entry, per-axis bits B = min(16, 63/k), so
-    // `--zorder-col host,sensor` gives every output row group tight
-    // zone maps on time AND both tags (LayoutPruningSpec measures the
-    // file-skip effect; ZorderCompactSpec the clustering).
-    val sortKey: org.apache.spark.sql.Column = zorderColumns match {
-      case Nil => col(timeColumn)
-      case seriesCols =>
-        import org.apache.spark.sql.functions.{expr, lit, xxhash64}
-        val k = seriesCols.length + 1
-        val bits = graft.queries.PipelineQueries.zAxisBits(k)
-        val gridMax = (1L << bits) - 1
-        val lo = bucket.files.map(_.min_time).min
-        val span = math.max(1L, bucket.files.map(_.max_time).max - lo)
-        // exact integer div (the double quotient is inexact past 2^53);
-        // clamp the RAW time into [lo, lo+span] BEFORE scaling: a stray
-        // row far outside the bucket's trusted metadata bounds must land
-        // on grid cell 0/max, not wrap the ×gridMax product negative
-        // (r7 advice). The product is computed in DECIMAL so even a
-        // multi-day --window-hours span (> ~39 h overflows int64×65535)
-        // stays exact; layout-only cost, once per row.
-        val tb = expr(
-          s"CAST((CAST(least(greatest(`$timeColumn`, ${lo}L), ${lo + span}L) " +
-            s"AS DECIMAL(38,0)) - ${lo}L) * ${gridMax}L div ${span}L AS BIGINT)")
-        val axes = tb +: seriesCols.map(c =>
-          xxhash64(col(c)).bitwiseAND(lit(gridMax)))
-        graft.queries.PipelineQueries.interleaveBits(axes, bits)
-    }
-    val sorted: DataFrame =
-      if (kSort == 1) df.coalesce(1).sortWithinPartitions(sortKey)
-      else df.repartitionByRange(kSort, sortKey)
-        .sortWithinPartitions(sortKey)
-    new MergePlan(idx, bucket, kSort, split, sorted)
+    /** The times that cut this bucket's `kSort` ranges: range `r` holds
+      * the rows with exactly `r` cuts at or below their time. The z-curve
+      * is cut on its time axis too: equal ranges of the z-space hold
+      * equal rows only when the rows spread evenly over the bucket's
+      * window, and a few tag values or one late row upset that. */
+    def cuts: Array[Long] = timeCuts(files.flatMap(_.ranges), kSort)
   }
 
-  /** Write one group's sorted frames into `dir` with ONE Spark job and
-    * hand each member the part files of its own partitions. */
-  private def writeGroup(members: Vector[MergePlan], dir: Path)
-      : Vector[(MergePlan, Vector[Path])] = {
-    val union = spark.sparkContext.union(members.map(_.rows))
-    // the slices below are only right if the union APPENDED every
-    // member's partitions; a zip (partitioner-aware union) would mix
-    // buckets inside one part
-    val widths = members.map(_.width)
-    if (union.getNumPartitions != widths.sum)
-      throw new IllegalStateException(s"union of ${members.length} buckets has " +
-        s"${union.getNumPartitions} partitions, not the ${widths.sum} of its members")
-    val frame = graftbridge.dataFrameOf(spark, union, members.head.sorted.schema)
-    frame.write
+  /** The sort key over a scan carrying [[ScanCols]]: time, or the opt-in
+    * z-order layout (like the sizing knobs: a capability the reference's
+    * config shape implies but its ORDER BY time never uses). Within ONE
+    * bucket the time axis is already window-bounded with known metadata
+    * min/max, so a FIXED-GRID interleave — time scaled into B bits by the
+    * bucket's own span × B hash bits per tag column — is the z-curve with
+    * ZERO extra passes (q52's rank equalization needs two rank shuffles;
+    * here the window bound does the equalizing). N AXES (r7 verdict #9):
+    * time is axis 0 plus one hash axis per --zorder-col entry, per-axis
+    * bits B = min(16, 63/k), so `--zorder-col host,sensor` gives every
+    * output row group tight zone maps on time AND both tags
+    * (LayoutPruningSpec measures the file-skip effect; ZorderCompactSpec
+    * the clustering). The bucket's window arrives as the scan's `lo` and
+    * `span` columns. */
+  private def sortKey: Column = zorderColumns match {
+    case Nil => col(timeColumn)
+    case seriesCols =>
+      import org.apache.spark.sql.functions.{expr, lit, xxhash64}
+      val bits = graft.queries.PipelineQueries.zAxisBits(seriesCols.length + 1)
+      val gridMax = (1L << bits) - 1
+      val (lo, span) = (s"`${ScanCols(1).name}`", s"`${ScanCols(2).name}`")
+      // exact integer div (the double quotient is inexact past 2^53);
+      // clamp the RAW time into [lo, lo+span] BEFORE scaling: a stray
+      // row far outside the bucket's trusted metadata bounds must land
+      // on grid cell 0/max, not wrap the ×gridMax product negative
+      // (r7 advice). The product is computed in DECIMAL so even a
+      // multi-day --window-hours span (> ~39 h overflows int64×65535)
+      // stays exact; layout-only cost, once per row.
+      val tb = expr(
+        s"CAST((CAST(least(greatest(`$timeColumn`, $lo), $lo + $span) " +
+          s"AS DECIMAL(38,0)) - $lo) * ${gridMax}L div $span AS BIGINT)")
+      val axes = tb +: seriesCols.map(c => xxhash64(col(c)).bitwiseAND(lit(gridMax)))
+      graft.queries.PipelineQueries.interleaveBits(axes, bits)
+  }
+
+  /** Write one group's buckets into `dir` with ONE scan and ONE Spark job
+    * and hand each member the part files of its own partitions: bucket
+    * `j` owns parts `[base(j), base(j) + kSort(j))`. */
+  private def writeGroup(members: Vector[Member], dir: Path): Vector[(Member, Vector[Path])] = {
+    val bases = members.scanLeft(0)(_ + _.kSort)
+    val partitions = members.zipWithIndex.flatMap { case (m, j) =>
+      val files = m.files.sortBy(_.path.toString).flatMap { f =>
+        (0L until f.length by sortPartitionBytes).map(at => graftbridge.ScanFile(f.path, at,
+          math.min(sortPartitionBytes, f.length - at), f.length, Seq[Any](j, m.lo, m.span)))
+      }
+      if (m.kSort == 1) Vector(files)
+      else files.foldLeft(Vector.empty[Vector[graftbridge.ScanFile]]) { (acc, f) =>
+        if (acc.nonEmpty && acc.last.map(_.length).sum + f.length <= sortPartitionBytes)
+          acc.init :+ (acc.last :+ f)
+        else acc :+ Vector(f)
+      }
+    }
+    val scan = graftbridge.parquetScanOf(spark, members.head.schema, StructType(ScanCols),
+      partitions)
+    val key = sortKey
+    val sorted =
+      if (members.head.kSort == 1) scan.sortWithinPartitions(key)
+      else {
+        val cuts = members.map(_.cuts).toArray
+        val base = bases.toArray
+        // deterministic: a re-run puts every row in the same part
+        val part = udf { (j: Int, t: java.lang.Long) =>
+          if (t == null) base(j)
+          else {
+            val at = java.util.Arrays.binarySearch(cuts(j), t.longValue)
+            base(j) + (if (at >= 0) at + 1 else -at - 1)
+          }
+        }
+        scan.repartitionById(bases.last, part(col(ScanCols.head.name), col(timeColumn)))
+          .sortWithinPartitions(key)
+      }
+    sorted.drop(ScanCols.map(_.name): _*).write
       .mode("overwrite")
       .option("compression", "zstd")
       .option("parquet.block.size", rowGroupTargetBytes.toString)
@@ -227,41 +236,46 @@ class Compactor(
     // spark.sql.files.maxRecordsPerFile is set; the concat joins them)
     val parts = fs.listStatus(dir).toVector.flatMap { st =>
       st.getPath.getName match {
-        case Compactor.PartName(i) => Some(i.toInt -> st.getPath)
+        case PartName(i) => Some(i.toInt -> st.getPath)
         case _ => None
       }
     }.sortBy { case (i, p) => (i, p.getName) }
-    val ends = widths.scanLeft(0)(_ + _)
-    members.zipWithIndex.map { case (p, j) =>
-      val own = parts.collect { case (i, f) if i >= ends(j) && i < ends(j + 1) => f }
-      // Spark writes no file for an empty partition other than index 0, so
-      // a bucket with no rows that is not first in its group gets none: it
-      // gets an empty file carrying the schema, as it would written alone
-      if (own.nonEmpty) p -> own
+    members.zipWithIndex.map { case (m, j) =>
+      val own = parts.filter { case (i, _) => i >= bases(j) && i < bases(j + 1) }
+      // Spark writes a file for partition 0 even when it is empty, which a
+      // split bucket must not publish as an empty `_p00` part
+      def empty0 = { val r = openParquet(own.head._2); try r.getRecordCount == 0 finally r.close() }
+      val kept = (if (m.split && own.length > 1 && own.head._1 == 0 && empty0) own.tail
+        else own).map(_._2)
+      // and no file for any other empty partition, so a bucket with no rows
+      // that is not first in its group gets an empty file carrying the
+      // schema, as it would written alone
+      if (kept.nonEmpty) m -> kept
       else {
-        val empty = new Path(dir, s"empty-${p.idx}.parquet")
+        val empty = new Path(dir, s"empty-${m.idx}.parquet")
         concatParquet(parts.head._2, Vector.empty, empty)
-        p -> Vector(empty)
+        m -> Vector(empty)
       }
     }
   }
 
   /** Publish one bucket's parts at their final names and read back their
     * footer stats. */
-  private def commitBucket(rootDir: Path, p: MergePlan, parts: Vector[Path])
+  private def commitBucket(rootDir: Path, m: Member, parts: Vector[Path])
       : Vector[FileMeta] = {
-    val bucket = p.bucket
-    // parts are in range order => concatenation order is the global
-    // sort-key order (time by default; the z-curve when zorderColumns is
-    // set — row groups stay range-disjoint either way)
-    if (!p.split) {
+    val bucket = m.bucket
+    // parts are in time-range order => concatenation order is the
+    // bucket's sort order (time by default; with zorderColumns one
+    // z-curve walk per time range — row groups stay range-disjoint either
+    // way)
+    if (!m.split) {
       // single-file contract: row-group-level byte concat of the parts,
       // staged next to them so the final name only ever receives a
       // COMPLETE file via commitFile
       val dest = new Path(rootDir, bucket.outputPath)
       if (parts.length == 1) commitFile(parts.head, dest)
       else {
-        val staged = new Path(parts.head.getParent, s"concat-${p.idx}.parquet")
+        val staged = new Path(parts.head.getParent, s"concat-${m.idx}.parquet")
         concatParquet(parts.head, parts, staged)
         commitFile(staged, dest)
       }
@@ -297,8 +311,11 @@ class Compactor(
     * would infer — the footer of the path-sorted first input, its Spark
     * row metadata when present, else its parquet schema converted under
     * the session's SQL conf. Spark would launch one job per bucket to
-    * read that footer again; here it is already in hand. */
-  private[compact] def requireUniformSchema(rootDir: Path, bucket: Bucket): StructType = {
+    * read that footer again; here it is already in hand. With it, each
+    * input's length and, when `timeRanges` is set, its [[InputFile]]
+    * time ranges, all from the same open. */
+  private[compact] def readInputs(rootDir: Path, bucket: Bucket, timeRanges: Boolean)
+      : (StructType, Vector[InputFile]) = {
     import scala.jdk.CollectionConverters._
     // canonical column set: path + primitive + logical annotation. The
     // repetition level (required vs optional) is deliberately EXCLUDED —
@@ -310,12 +327,16 @@ class Compactor(
         val ann = Option(t.getLogicalTypeAnnotation).fold("")(_.toString)
         s"${cd.getPath.mkString(".")}:${t.getPrimitiveTypeName}:$ann"
       }.toSet
+    val window = (bucket.files.map(_.min_time).min, bucket.files.map(_.max_time).max)
     val footers = bucket.files.map { f =>
-      val p = new Path(rootDir, f.path)
-      val r = openParquet(p)
-      try (f.path, p, r.getFooter) finally r.close()
+      val in = HadoopInputFile.fromPath(new Path(rootDir, f.path), fs.getConf)
+      val r = Compactor.openParquet(in)
+      try {
+        val ranges = if (timeRanges) rangesOf(r, window) else Vector.empty
+        (f.path, in, r.getFooter, ranges)
+      } finally r.close()
     }
-    val schemas = footers.map { case (rel, _, footer) =>
+    val schemas = footers.map { case (rel, _, footer, _) =>
       rel -> canon(footer.getFileMetaData.getSchema)
     }
     if (schemas.map(_._2).distinct.length > 1) {
@@ -330,9 +351,49 @@ class Compactor(
     }
     // the converter is built from the session's SQL conf, as Spark's own
     // inference builds it: a Hadoop conf lacks the SQL keys it reads
-    val (_, first, footer) = footers.minBy(_._2.toString)
-    ParquetFileFormat.readSchemaFromFooter(new Footer(first, footer),
+    val (_, first, footer, _) = footers.minBy(_._2.getPath.toString)
+    val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(first.getPath, footer),
       new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    schema -> footers.map { case (_, in, _, ranges) => InputFile(in.getPath, in.getLength, ranges) }
+  }
+
+  /** The time column's (min, max, rows) per page of `r`'s file, from its
+    * page index, or per row group where a row group has none; a range
+    * without time stats is taken to span `window`. Pages hold at most
+    * ~20,000 rows (parquet-mr's default), so on time-ordered inputs they
+    * follow where the rows bunch, which a row group's range cannot show.
+    * The index is read on the already open file: no extra open. */
+  private def rangesOf(r: ParquetFileReader, window: (Long, Long)): Vector[(Long, Long, Long)] = {
+    import scala.jdk.CollectionConverters._
+    r.getFooter.getBlocks.asScala.toVector.flatMap { b =>
+      val pageIndex = b.getColumns.asScala
+        .find(c => c.getPath.toDotString == timeColumn &&
+          c.getPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.INT64)
+        .flatMap(c => Option(r.readColumnIndex(c)).zip(Option(r.readOffsetIndex(c))))
+      pageIndex match {
+        case Some((ci, oi)) =>
+          def at(v: java.util.List[java.nio.ByteBuffer], i: Int) =
+            v.get(i).duplicate().order(ByteOrder.LITTLE_ENDIAN).getLong
+          (0 until oi.getPageCount).toVector.filterNot(i => ci.getNullPages.get(i)).map { i =>
+            (at(ci.getMinValues, i), at(ci.getMaxValues, i),
+              oi.getLastRowIndex(i, b.getRowCount) - oi.getFirstRowIndex(i) + 1)
+          }
+        case None =>
+          val (min, max) = timeRange(b).getOrElse(window)
+          Vector((min, max, b.getRowCount))
+      }
+    }
+  }
+
+  /** The time column's min and max in one row group, when it has them. */
+  private def timeRange(block: BlockMetaData): Option[(Long, Long)] = {
+    import scala.jdk.CollectionConverters._
+    block.getColumns.asScala.find(_.getPath.toDotString == timeColumn)
+      .map(_.getStatistics).filter(s => s != null && s.hasNonNullValue)
+      .flatMap(s => (s.genericGetMin, s.genericGetMax) match {
+        case (min: java.lang.Long, max: java.lang.Long) => Some((min.longValue, max.longValue))
+        case _ => None
+      })
   }
 
   /** Publish a finished file at its final name — the object-store commit
@@ -386,46 +447,53 @@ class Compactor(
     writer.end(keyValueMeta)
   }
 
-  /** Exact stats from the written file's parquet footer — no rescan job.
-    * Falls back to planner rollup bounds when the time column carries no
-    * statistics. */
+  /** Exact stats from the written file's parquet footer — no rescan job;
+    * time bounds 0 when the time column carries no statistics. */
   private def footerStats(file: Path, relPath: String, id: Long): FileMeta = {
+    import scala.jdk.CollectionConverters._
     val reader = openParquet(file)
     try {
-      val footer = reader.getFooter
-      val rows = reader.getRecordCount
-      var minT = Long.MaxValue
-      var maxT = Long.MinValue
-      footer.getBlocks.forEach { block =>
-        block.getColumns.forEach { c =>
-          if (c.getPath.toDotString == timeColumn && c.getStatistics != null &&
-            c.getStatistics.hasNonNullValue) {
-            c.getStatistics.genericGetMin match {
-              case l: java.lang.Long =>
-                minT = math.min(minT, l)
-                maxT = math.max(maxT,
-                  c.getStatistics.genericGetMax.asInstanceOf[java.lang.Long])
-              case _ => ()
-            }
-          }
-        }
-      }
-      val len = fs.getFileStatus(file).getLen
-      FileMeta(id, relPath, len, rows,
-        chunk_time = if (minT != Long.MaxValue) minT else 0L,
-        min_time = if (minT != Long.MaxValue) minT else 0L,
-        max_time = if (maxT != Long.MinValue) maxT else 0L)
+      val ranges = reader.getFooter.getBlocks.asScala.flatMap(timeRange)
+      val (minT, maxT) = if (ranges.isEmpty) (0L, 0L) else (ranges.map(_._1).min, ranges.map(_._2).max)
+      FileMeta(id, relPath, fs.getFileStatus(file).getLen, reader.getRecordCount,
+        chunk_time = minT, min_time = minT, max_time = maxT)
     } finally reader.close()
   }
 }
 
 object Compactor {
-  /** Most buckets one write carries. Every task of a job deserializes
-    * the job's whole lineage, which grows by ~0.4 ms per bucket (measured
-    * alone: one bucket's sorted RDD 22 KB and 1.4 ms, a union of 12 89 KB
-    * and 6.1 ms); the cap bounds that at ~25 ms per task, next to the
-    * ~9 ms every write task spends on its Hadoop Configuration. */
-  private[compact] val MaxBucketsPerWrite = 64
+  /** An input file, its length, and the (min, max, rows) of its time
+    * column per page or row group (empty unless the bucket is
+    * range-sorted: only range cuts read them). */
+  private[compact] final case class InputFile(path: Path, length: Long,
+      ranges: Vector[(Long, Long, Long)])
+
+  /** The constant columns every scanned row carries: its bucket's index in
+    * the write, and the bucket's z-order time origin and span. */
+  private val ScanCols = Seq("_graft_bucket" -> IntegerType, "_graft_lo" -> LongType,
+    "_graft_span" -> LongType).map { case (name, t) => StructField(name, t, nullable = false) }
+
+  /** The times that cut rows spread evenly over each `(min, max, rows)`
+    * range into `k` ranges of about equal rows: cut `r` is the least time
+    * with about `r / k` of the rows below it. A cut at the least time
+    * would leave its range empty and is dropped, as are repeats. */
+  private def timeCuts(ranges: Seq[(Long, Long, Long)], k: Int): Array[Long] = {
+    val least = ranges.map(_._1).minOption.getOrElse(0L)
+    def below(t: Long): Double = ranges.map { case (min, max, rows) =>
+      if (t <= min) 0.0
+      else if (t > max) rows.toDouble
+      else rows * ((t - min).toDouble / (max - min + 1).toDouble)
+    }.sum
+    val total = ranges.map(_._3).sum.toDouble
+    (1 until k).map { r =>
+      var (a, b) = (least, ranges.map(_._2).maxOption.getOrElse(least))
+      while (a < b) {
+        val mid = a + ((b - a) >>> 1)
+        if (below(mid) >= total * r / k) b = mid else a = mid + 1
+      }
+      a
+    }.filter(_ > least).distinct.toArray
+  }
 
   /** Per-host staging directory of [[Compactor.mergeAll]] (`<host>/…`). */
   val StagingDir = ".tmp_compact"

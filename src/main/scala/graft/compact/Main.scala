@@ -1,6 +1,5 @@
 package graft.compact
 
-import org.apache.spark.sql.SparkSession
 import graft.Sessions
 
 /** CLI mirroring the reference's arg surface (kompactor.ts:326-372):

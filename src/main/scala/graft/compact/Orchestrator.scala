@@ -14,11 +14,12 @@ import scala.collection.parallel.ForkJoinTaskSupport
   * originals → GC empty dirs (SURVEY.md §7.4 bug 5).
   *
   * Buckets are independent. A host's buckets that share a read schema
-  * are merged by one Spark write (`Compactor.mergeAll`, at most
-  * `MaxBucketsPerWrite` buckets each) with one task per bucket sort
-  * partition, so the driver submits one job per schema, not one per
-  * bucket. Footer reads, bucket planning, writes and per-bucket commits
-  * run on `bucketParallelism` driver threads.
+  * are merged by one scan and one Spark write (`Compactor.mergeAll`):
+  * one write for the buckets that sort in one partition, with one task
+  * per bucket and no shuffle, and one for the range-sorted buckets, so
+  * the driver submits one job per schema and kind, not one per bucket.
+  * Footer reads, writes and per-bucket commits run on
+  * `bucketParallelism` driver threads.
   */
 final case class CompactConfig(
     dataDir: String,

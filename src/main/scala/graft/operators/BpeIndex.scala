@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.queries.TextQueries
 
 /** BPE-tokenizer-as-artifact (r10 verdict #7): the t13 merge table IS

@@ -366,7 +366,7 @@ object DedupIndex {
     * plain window read on unbucketed artifacts. */
   private def probeWindow(spark: SparkSession, dir: String, m: Manifest,
       pathOf: (String, Long) => String, slots: Seq[Long], cols: Seq[String],
-      key: String, probe: DataFrame, keysHint: Long = -1L): DataFrame = {
+      key: String, probe: DataFrame, keysHint: Long): DataFrame = {
     val b = m.params.getOrElse("layout_buckets", 0L)
     if (b == 0 || keysHint < 0)
       return readWindow(spark, dir, m, pathOf, slots, cols)

@@ -90,7 +90,7 @@ object DistributedRank {
     * instead of re-scanning the data. */
   private def rankParts(df: DataFrame, groupCols: Seq[String],
       orderCols: Seq[Column], shardKey: Column, rnName: String,
-      numShards: Int, rowBound: Long = -1L): (DataFrame, DataFrame) = {
+      numShards: Int, rowBound: Long): (DataFrame, DataFrame) = {
     val shards =
       if (numShards > 0) numShards
       else df.sparkSession.sessionState.conf.numShufflePartitions

@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import graft.functions.XHash
 
 /** Multimodal column handling: image/audio/video as opaque `binary`
   * columns with typed metadata, batch decode / feature extraction via

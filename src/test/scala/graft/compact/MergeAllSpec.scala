@@ -7,8 +7,9 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
-/** `Compactor.mergeAll` writes a host's same-schema buckets with one Spark
-  * job and hands each bucket its own partitions' part files. A bucket
+/** `Compactor.mergeAll` writes a host's same-schema buckets with one scan
+  * and one Spark job (one-partition and range-sorted buckets apart) and
+  * hands each bucket its own partitions' part files. A bucket
   * merged inside a group must come out exactly as it does merged alone,
   * and no part may ever carry another bucket's rows. */
 class MergeAllSpec extends AnyFunSuite {
@@ -17,8 +18,11 @@ class MergeAllSpec extends AnyFunSuite {
   private val hourNs = 3600L * 1000000000L
 
   /** One bucket of `files` WAL files in `hour`, `rows` rows each; the
-    * `tag` column names the bucket so a mixed part would show. */
-  private def writeBucket(dir: File, hour: Int, files: Int, rows: Int): Bucket = {
+    * `tag` column names the bucket so a mixed part would show. A
+    * `bunched` bucket holds 90 % of its rows in the hour's first 6
+    * minutes and writes pages of 500 rows. */
+  private def writeBucket(dir: File, hour: Int, files: Int, rows: Int,
+      bunched: Boolean = false): Bucket = {
     import spark.implicits._
     val metas = (0 until files).map { f =>
       val wal = f"${hour * 10 + f + 1}%010d"
@@ -28,10 +32,15 @@ class MergeAllSpec extends AnyFunSuite {
       val tmp = new File(dest.getParentFile, ".t")
       val t0 = base + hour * hourNs
       // interleaved across files, so the merge really has to sort
-      val data = (0 until rows).map(i =>
-        (t0 + (i.toLong * files + f) * 1000003L, s"h$hour", s"sensor${i % 7}", i * 0.5))
+      def at(i: Int): Long =
+        if (!bunched) (i.toLong * files + f) * 1000003L
+        else if (i < rows * 9 / 10) i * (hourNs / 10 / (rows * 9 / 10)) + f
+        else hourNs / 10 + (i - rows * 9 / 10) * (hourNs * 9 / 10 / (rows / 10)) + f
+      val data = (0 until rows).map(i => (t0 + at(i), s"h$hour", s"sensor${i % 7}", i * 0.5))
       data.toDF("time", "tag", "sensor", "value").coalesce(1)
-        .write.mode("overwrite").option("compression", "none").parquet(tmp.toString)
+        .write.mode("overwrite").option("compression", "none")
+        .option("parquet.page.row.count.limit", if (bunched) 500 else 20000)
+        .parquet(tmp.toString)
       val part = tmp.listFiles.find(_.getName.endsWith(".parquet")).get
       Files.move(part.toPath, dest.toPath)
       tmp.listFiles.foreach(_.delete()); tmp.delete()
@@ -77,12 +86,8 @@ class MergeAllSpec extends AnyFunSuite {
 
   // Every sort key in the fixture is unique (times are 1 ms apart and the
   // z-order time grid is finer than that), so a bucket's output order is
-  // fully determined. Where a bucket is range-sorted (hours 21 and 22),
-  // the split points come from Spark's RangePartitioner sample, which is
-  // seeded by the RDD id and so differs between ANY two runs, alone or
-  // grouped: those buckets are compared by rows, row order, row groups,
-  // output names and their stats summed over the outputs; the
-  // one-partition bucket is compared stat for stat, sizes included.
+  // fully determined; a range-sorted bucket's ranges come from its input
+  // footers, so it splits the same way alone or grouped.
   for (zorder <- Seq(Nil, Seq("sensor")))
     test(s"a bucket merged in a group equals it merged alone (zorder=$zorder)") {
       val aloneDir = Files.createTempDirectory("graft_mergeall_a").toFile
@@ -106,50 +111,85 @@ class MergeAllSpec extends AnyFunSuite {
         assert(groupsA == groupsG, s"bucket ${b.hourStart}: row-group count differs")
         assert(rowsG.forall(_.split('|')(1) == s"h${b.hourStart}"),
           s"bucket ${b.hourStart} holds another bucket's rows")
-        def summary(ms: Vector[FileMeta]) = (ms.map(m => (m.id, m.path, m.chunk_time)),
-          ms.map(_.row_count).sum, ms.map(_.min_time).min, ms.map(_.max_time).max)
-        assert(summary(a) == summary(g), s"bucket ${b.hourStart}: stats differ")
-        if (b.hourStart == 23) assert(a == g, "one-partition bucket: stats differ")
+        assert(a == g, s"bucket ${b.hourStart}: stats differ")
       }
       assertNoStaging(aloneDir)
       assertNoStaging(groupDir)
     }
 
-  test("a group larger than one write carries is split across writes") {
-    val dir = Files.createTempDirectory("graft_mergeall_cap").toFile
-    // one bucket written by Spark, the rest copies of its two files
-    val first = writeBucket(dir, 0, 2, 10)
-    val n = Compactor.MaxBucketsPerWrite + 1
-    val buckets = first +: (1 until n).map { i =>
-      val files = first.files.map { m =>
-        val rel = m.path.replace("table-0", s"table-$i")
-        val dest = new File(dir, rel)
-        dest.getParentFile.mkdirs()
-        Files.copy(new File(dir, m.path).toPath, dest.toPath)
-        m.copy(path = rel)
+  for (zorder <- Seq(Nil, Seq("sensor")))
+    test(s"a range-sorted tree merged twice writes the same parts (zorder=$zorder)") {
+      val dirs = Seq("graft_mergeall_r1", "graft_mergeall_r2")
+        .map(Files.createTempDirectory(_).toFile)
+      val runs = dirs.map(d =>
+        compactor(zorder).mergeAll(new Path(d.toString), fixture(d), parallelism = 2))
+      runs.head.zip(runs(1)).foreach { case ((b, one), (_, two)) =>
+        assert(one == two, s"bucket ${b.hourStart}: part names or footer stats differ")
+        one.zip(two).foreach { case (m1, m2) =>
+          assert(contents(dirs.head, Vector(m1)) == contents(dirs(1), Vector(m2)),
+            s"${m1.path}: rows or row groups differ")
+        }
       }
-      first.copy(table = s"table-$i", files = files, sources = files.map(_.path).toSet)
+      // the footers' time ranges cut hour 21 into parts of about equal rows
+      val rows = runs.head.head._2.map(_.row_count)
+      assert(rows.length == 5 && rows.forall(n => n > 18000 / 5 / 2 && n < 18000 / 5 * 2),
+        s"hour 21 parts hold $rows rows")
     }
+
+  // A row group's time range says nothing about where its rows bunch; the
+  // page index does, page by page, on inputs whose pages follow time.
+  for (zorder <- Seq(Nil, Seq("sensor")))
+    test(s"range cuts follow rows bunched inside a row group (zorder=$zorder)") {
+      val dir = Files.createTempDirectory("graft_mergeall_bunched").toFile
+      val bucket = writeBucket(dir, 21, files = 3, rows = 6000, bunched = true)
+      val out = compactor(zorder).merge(new Path(dir.toString), bucket)
+      val rows = out.map(_.row_count)
+      assert(rows.sum == 18000)
+      assert(rows.length == 5 && rows.forall(n => n > 18000 / 5 / 2 && n < 18000 / 5 * 2),
+        s"parts hold $rows rows")
+    }
+
+  /** `f`'s result, and the stages and the number of jobs it ran. */
+  private def counted[A](f: => A): (A, Vector[graft.bench.StageStats], Int) = {
+    val sc = spark.sparkContext
+    val stages = new graft.bench.StageListener
     val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
+    val jobListener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.stageInfos.exists(_.name.contains("Compactor.scala"))) jobs.incrementAndGet()
+        jobs.incrementAndGet()
     }
-    graft.Bench.drainListenerBus(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    val out =
-      try new Compactor(spark, Compactor.localFs(spark))
-        .mergeAll(new Path(dir.toString), buckets, parallelism = 4)
-      finally {
-        graft.Bench.drainListenerBus(spark.sparkContext)
-        spark.sparkContext.removeSparkListener(listener)
-      }
-    assert(jobs.get == 2, s"$n buckets of one schema took ${jobs.get} writes")
-    out.foreach { case (b, metas) =>
-      assert(metas.map(_.row_count) == Vector(20L))
-      assert(metas.head.path.startsWith(s"edge0/dbs/db-0/${b.table}/"))
+    graft.Bench.drainListenerBus(sc)
+    sc.addSparkListener(stages)
+    sc.addSparkListener(jobListener)
+    try {
+      val a = f
+      graft.Bench.drainListenerBus(sc)
+      (a, stages.stages, jobs.get)
+    } finally {
+      sc.removeSparkListener(stages)
+      sc.removeSparkListener(jobListener)
     }
-    assertNoStaging(dir)
+  }
+
+  test("a write of one-partition buckets is one stage, one task per bucket, no shuffle") {
+    val dir = Files.createTempDirectory("graft_mergeall_shape1").toFile
+    val buckets = Vector(writeBucket(dir, 21, 2, 40), writeBucket(dir, 22, 2, 25),
+      writeBucket(dir, 23, 3, 30))
+    val (out, stages, jobs) = counted(new Compactor(spark, Compactor.localFs(spark))
+      .mergeAll(new Path(dir.toString), buckets))
+    assert(out.map(_._2.map(_.row_count)) == Vector(Vector(80L), Vector(50L), Vector(90L)))
+    assert(jobs == 1 && stages.length == 1, s"$jobs jobs, stages $stages")
+    assert(stages.head.tasks == 3, s"stages $stages")
+    assert(stages.map(s => s.shuffleRead + s.shuffleWrite).sum == 0, s"stages $stages")
+  }
+
+  test("a write of range-sorted buckets runs no sample job") {
+    val dir = Files.createTempDirectory("graft_mergeall_shape2").toFile
+    // hours 21 and 22: five and two sort ranges, one write
+    val buckets = fixture(dir).take(2)
+    val (out, _, jobs) = counted(compactor(Nil).mergeAll(new Path(dir.toString), buckets))
+    assert(out.map(_._2.length) == Vector(5, 1))
+    assert(jobs <= 2, s"$jobs jobs: more than the map stage and the write")
   }
 
   test("a stray per-bucket staging directory of an older release is removed") {

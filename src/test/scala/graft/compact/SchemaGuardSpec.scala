@@ -112,7 +112,7 @@ class SchemaGuardSpec extends AnyFunSuite {
     buckets.foreach { b =>
       val inputs = b.files.map(f => new File(dir, f.path).toString)
       val inferred = spark.read.parquet(inputs: _*)
-      val explicit = compactor.requireUniformSchema(root, b)
+      val (explicit, _) = compactor.readInputs(root, b, timeRanges = false)
       assert(explicit.fieldNames.toSeq == inferred.schema.fieldNames.toSeq)
       assert(spark.read.schema(explicit).parquet(inputs: _*).schema == inferred.schema)
       val expected = inferred.orderBy("time").collect().toSeq
